@@ -109,7 +109,6 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.8,
-    materialize_shingles: bool = True,
 ) -> DataFrame:
     """Candidate pairs by shared shingles, scored with exact Jaccard.
 
@@ -117,20 +116,14 @@ def ngram_jaccard_pairs(
     shingle hash, count common shingles per pair, then
     |A∩B| / (|A| + |B| − |A∩B|).
 
-    ``materialize_shingles`` scale caveat (ADVICE r14): unlike the
+    Scale caveat (ADVICE r14): the per-doc shingle SET table is
+    computed once and lazily localCheckpointed so both join sides read
+    it instead of re-running the shingle pipeline. Unlike the
     minhash/simhash SIGNATURE tables (N rows of fixed width — tiny at
-    any scale), the checkpointed table here is the per-doc shingle SET
-    table — N rows, but each row carries the doc's distinct shingle
-    hashes, so total bytes ≈ the corpus's distinct-shingle count
-    (r15: this used to be the EXPLODED shingle table; the set form
-    holds the same longs contiguously with one id per doc instead of
-    one per shingle). localCheckpoint blocks are disk-backed (spill,
-    not OOM) but NON-REPLICATED and lineage is truncated: on a real
-    cluster an executor/decommission loss fails the query instead of
-    recomputing. On large corpora or decommissioning clusters prefer
-    ``materialize_shingles=False`` (each join side recomputes the
-    shingle pipeline — plans stay correct) or persist the set table
-    with lineage (``.persist(StorageLevel.MEMORY_AND_DISK)``) instead.
+    any scale) this table's total bytes ≈ the corpus's distinct-shingle
+    count. localCheckpoint blocks are disk-backed (spill, not OOM) but
+    NON-REPLICATED and lineage is truncated: on a real cluster an
+    executor/decommission loss fails the query instead of recomputing.
     """
     # per-doc shingle SET in ONE exchange (r15, guide §2.4): collect_set
     # over the raw (possibly-duplicated) shingle rows replaces the r14
@@ -141,12 +134,8 @@ def ngram_jaccard_pairs(
         _hashed_shingle_rows(df, text_col, id_col, n)
         .groupBy("id")
         .agg(F.collect_set("shh").alias("arr"))
+        .localCheckpoint(eager=False)
     )
-    if materialize_shingles:
-        # computed ONCE, not once per join side — same pattern as
-        # minhash_lsh_pairs' set table (disable where checkpointing is
-        # unavailable; plans stay correct, just recompute per consumer)
-        arrs = arrs.localCheckpoint(eager=False)
     sh = arrs.select("id", F.size("arr").alias("sz"), F.explode("arr").alias("shh"))
     a, b = sh.alias("a"), sh.alias("b")
     return (
@@ -237,7 +226,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs.
 
@@ -280,12 +268,11 @@ def minhash_lsh_pairs(
     406 s CPU for the r11 inverted-index plan — and the sf0.1→sf1
     scaling exponent drops from ~1.0 to ~flat.
 
-    ``materialize_signatures``: lazy-localCheckpoints the set table
-    and the signature table (N rows × shingle array / ×16 longs —
-    tiny relative to the corpus at any scale; this is the
-    signature-table materialization every production minhash pipeline
-    does). Disable only where checkpointing is unavailable — plans
-    stay correct, the collect agg just recomputes per consumer.
+    The set table and the signature table (N rows × shingle array /
+    ×16 longs — tiny relative to the corpus at any scale) are lazily
+    localCheckpointed: the signature-table materialization every
+    production minhash pipeline does, so the collect agg runs once, not
+    once per consumer.
     """
     if num_hashes % bands != 0 or bands < 1:
         # silent truncation would band on fewer hashes than requested
@@ -312,9 +299,8 @@ def minhash_lsh_pairs(
         _hashed_shingle_rows(df, text_col, id_col, shingle_n)
         .groupBy("id")
         .agg(F.collect_set("shh").alias("arr"))
+        .localCheckpoint(eager=False)
     )
-    if materialize_signatures:
-        arrs = arrs.localCheckpoint(eager=False)
 
     # stage 2b: minhash signature — k seed-mixed min columns in one
     # codegen HashAggregate over the re-exploded set table (partition-
@@ -329,9 +315,8 @@ def minhash_lsh_pairs(
                 for s in range(num_hashes)
             ]
         )
+        .localCheckpoint(eager=False)
     )
-    if materialize_signatures:
-        sig = sig.localCheckpoint(eager=False)
 
     # per-band bucket from the signature columns, long-only hashing
     def band_bucket(b: int) -> Column:
@@ -397,25 +382,34 @@ def minhash_lsh_pairs(
     )
 
 
-def connected_components_star(
+#: round bound of the large-star/small-star loop in
+#: ``connected_components``. Rounds grow as O(log² n) in the node count,
+#: not with component diameter, so 30 is far beyond any real pair graph;
+#: hitting it means something is wrong and the loop warns.
+_CC_MAX_ROUNDS = 30
+
+
+def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): converges in O(log² n) rounds — in practice a handful —
-    regardless of component DIAMETER, unlike min-label propagation
-    whose round count equals the longest chain. This is the right
-    algorithm when near-dup graphs contain long chains (templated
-    crawl pages linking a→b→c→…), the exact case ADVICE r2 flagged.
+    """Cluster near-dup pairs into components: (id, canonical_id) with
+    canonical = the minimum id reachable through the pair graph, for
+    every id that appears in ``pairs``.
+
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): converges in
+    O(log² n) rounds — in practice a handful — regardless of component
+    DIAMETER, so long chains (templated crawl pages linking a→b→c→…,
+    ADVICE r2) come back exact. Min-label propagation would need one
+    round per chain link.
 
     large-star: every neighbor v > u re-points to u's component-min m;
     small-star: every neighbor v ≤ u re-points to m. Both are one
-    window-min + projection over the edge list — no driver data.
-    Returns (id, canonical_id), canonical = component minimum, same
-    contract as ``connected_components``.
+    window-min + projection over the edge list — no driver data. Each
+    round localCheckpoints so lineage stays flat, and the loop exits as
+    soon as a round leaves the edge set unchanged.
     """
     import warnings
 
@@ -423,11 +417,12 @@ def connected_components_star(
 
     e = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
+    # self-pairs name a node but carry no edge
     nodes = e.select(F.col("u").alias("id")).union(e.select("v")).distinct()
+    e = e.filter(F.col("u") != F.col("v"))
 
     wu = Window.partitionBy("u")
 
@@ -467,7 +462,7 @@ def connected_components_star(
         return (r["c"], r["h"])
 
     prev = sig(e)
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         e = small_star(large_star(e)).localCheckpoint()
         cur = sig(e)
         if cur == prev:
@@ -475,7 +470,7 @@ def connected_components_star(
         prev = cur
     else:
         warnings.warn(
-            f"connected_components_star did not stabilize in {max_iter} rounds",
+            f"connected_components did not stabilize in {_CC_MAX_ROUNDS} rounds",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -486,79 +481,6 @@ def connected_components_star(
         .agg(F.min(F.coalesce("v", "id")).alias("canonical_id"))
         .select("id", F.least("id", "canonical_id").alias("canonical_id"))
     )
-
-
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-    fallback_star: bool = True,
-) -> DataFrame:
-    """Cluster near-dup pairs into components: (id, canonical_id) with
-    canonical = the minimum id reachable through the pair graph.
-
-    Iterative min-label propagation: each round joins labels across the
-    (bidirectional) edge set and keeps the per-node minimum — the
-    classic Spark CC loop (GraphX/connected-components does the same).
-    Rounds needed = component diameter; near-dup clusters are shallow,
-    but long chains (boilerplate crawl data) can exceed ``max_iter`` —
-    then, instead of returning silently wrong labels, the function
-    warns and finishes with ``connected_components_star`` (O(log² n)
-    rounds independent of diameter; ``fallback_star=False`` restores
-    the warn-only behavior). Each iteration localCheckpoints so
-    lineage stays flat, and the loop exits as soon as a round changes
-    nothing.
-    """
-    import warnings
-
-    edges = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-    edges = edges.union(
-        edges.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    ).distinct()
-    labels = (
-        edges.select(F.col("s").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    ).localCheckpoint()
-    changed = 0
-    for _ in range(max_iter):
-        prop = (
-            edges.join(labels.withColumnRenamed("id", "s"), "s")
-            .groupBy("d")
-            .agg(F.min("lbl").alias("nlbl"))
-            .withColumnRenamed("d", "id")
-        )
-        # carry the changed flag THROUGH the checkpoint (r14): the
-        # convergence count then reads the materialized blocks instead
-        # of re-joining new labels against old — one join-free job per
-        # round instead of a second full join pipeline
-        new_labels = (
-            labels.join(prop, "id", "left")
-            .select(
-                "id",
-                F.least("lbl", F.coalesce("nlbl", "lbl")).alias("lbl"),
-                (F.coalesce("nlbl", "lbl") < F.col("lbl")).alias("__chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("__chg")).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    if changed > 0:
-        warnings.warn(
-            f"connected_components did not converge in max_iter={max_iter} rounds "
-            f"({changed} labels still changing)"
-            + (
-                "; finishing with large-star/small-star"
-                if fallback_star
-                else ": canonical ids may split one component — raise max_iter"
-            ),
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        if fallback_star:
-            return connected_components_star(pairs, id_a, id_b)
-    return labels.select("id", F.col("lbl").alias("canonical_id"))
 
 
 def dedup_assignments(
@@ -695,7 +617,6 @@ def simhash_candidates(
     num_blocks: int = 4,
     max_bucket_size: int | None = None,
     word_hash: Callable[[Column], Column] = F.xxhash64,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup candidates by simhash block-combination buckets, scored
     by exact hamming distance.
@@ -711,15 +632,13 @@ def simhash_candidates(
     pigeonhole recall guarantee is exact (see ``minhash_lsh_pairs`` for
     the cap trade-off).
     """
-    sig = simhash_rows(df, text_col, id_col, word_hash)
-    if materialize_signatures:
-        # r14: the banded self-join consumes the signature table on
-        # both sides and one side broadcasts, so Spark cannot reuse the
-        # exchange — without this the whole word-explode + word-hash +
-        # 64-bit-vote aggregation ran TWICE (plans/r14: two full scan→
-        # Generate→HashAggregate pipelines). N rows × (id, sim) — tiny
-        # at any scale.
-        sig = sig.localCheckpoint(eager=False)
+    # r14: the banded self-join consumes the signature table on both
+    # sides and one side broadcasts, so Spark cannot reuse the exchange
+    # — without the checkpoint the whole word-explode + word-hash +
+    # 64-bit-vote aggregation ran TWICE (plans/r14: two full scan→
+    # Generate→HashAggregate pipelines). N rows × (id, sim) — tiny at
+    # any scale.
+    sig = simhash_rows(df, text_col, id_col, word_hash).localCheckpoint(eager=False)
 
     # block c spans bits [starts[c], starts[c+1])
     bounds = [round(c * 64 / num_blocks) for c in range(num_blocks + 1)]
@@ -775,7 +694,6 @@ def embedding_dedup_pairs(
     threshold: float = 0.99,
     dim: int | None = None,
     num_planes: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine within a blocking key.
 
@@ -823,12 +741,10 @@ def embedding_dedup_pairs(
     ]
     if block_col:
         cols.append(F.col(block_col).alias("blk"))
-    e = df.select(*cols)
-    if materialize:
-        # r14: the self-join consumes this projection on both sides and
-        # the small side broadcasts (no exchange reuse), so the norm
-        # fold + LSH bucket assignment ran twice per row without it
-        e = e.localCheckpoint(eager=False)
+    # r14: the self-join consumes this projection on both sides and the
+    # small side broadcasts (no exchange reuse), so the norm fold + LSH
+    # bucket assignment ran twice per row without the checkpoint
+    e = df.select(*cols).localCheckpoint(eager=False)
     join_cond = F.col("x.id") < F.col("y.id")
     if block_col:
         join_cond = join_cond & (F.col("x.blk") == F.col("y.blk"))
@@ -854,7 +770,6 @@ def near_dedup_pipeline(
     threshold: float = 0.5,
     shingle_n: int = 3,
     max_bucket_size: int | None = 2000,
-    materialize_signatures: bool = True,
 ) -> DataFrame:
     """The 100 TB near-dedup runbook as one composed operator.
 
@@ -877,17 +792,15 @@ def near_dedup_pipeline(
     4. exact-dup members re-attach to their representative's cluster.
 
     Returns (id, canonical_id, is_kept) for EVERY input row — the same
-    shape as ``dedup_assignments``. Defaults are the cluster-scale
-    settings (cap on, signature table materialized); small-data callers
-    can flip both off.
+    shape as ``dedup_assignments``. The bucket cap defaults to the
+    cluster-scale setting; ``max_bucket_size=None`` turns it off.
     """
-    ex = exact_dedup(df, text_col, id_col)  # content_hash → representative
-    if materialize_signatures:
-        # ex is consumed twice (the representative semi-join and the
-        # member re-attach); without materialization each consumer
-        # re-runs the full scan + md5 + groupBy (r14: plans/r14 showed
-        # documents scanned twice just to rebuild this tiny table)
-        ex = ex.localCheckpoint(eager=False)
+    # content_hash → representative. ex is consumed twice (the
+    # representative semi-join and the member re-attach); the checkpoint
+    # keeps each consumer from re-running the full scan + md5 + groupBy
+    # (r14: plans/r14 showed documents scanned twice just to rebuild
+    # this tiny table)
+    ex = exact_dedup(df, text_col, id_col).localCheckpoint(eager=False)
     # representatives only: one row per distinct content
     reps = df.join(
         ex.select(F.col("canonical_id").alias(id_col)), id_col, "semi"
@@ -901,7 +814,6 @@ def near_dedup_pipeline(
         threshold=threshold,
         shingle_n=shingle_n,
         max_bucket_size=max_bucket_size,
-        materialize_signatures=materialize_signatures,
     )
     rep_assign = dedup_assignments(reps, pairs, id_col)  # rep id → cluster canonical
     # every original id → its exact representative → that rep's cluster
@@ -925,8 +837,6 @@ def decontaminate(
     eval_text_col: str = "text",
     n: int = 3,
     min_common_shingles: int = 1,
-    broadcast: bool | None = None,
-    broadcast_max_shingles: int = 5_000_000,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing word
     n-grams with an evaluation corpus.
@@ -940,14 +850,15 @@ def decontaminate(
     training text — so the plan is a broadcast semi-side aggregation,
     never an all-pairs comparison.
 
-    The broadcast is size-gated: the distinct eval shingle set is
-    materialized once (localCheckpoint — blocks are reclaimed by the
-    ContextCleaner when the result is dropped) and counted; above
-    ``broadcast_max_shingles`` (5M longs ≈ 40 MB payload, a safe
-    executor budget) the join falls back to a shuffle hash join
-    instead of OOMing every executor on an unexpectedly large eval
-    corpus. ``broadcast`` forces the decision either way and skips the
-    probe job.
+    Spark's broadcast threshold decides the join strategy: the eval
+    set joins with no hint, so ``spark.sql.autoBroadcastJoinThreshold``
+    at planning and AQE's runtime join selection (from the measured
+    size of the eval side's exchange) pick broadcast for a small eval
+    corpus and a shuffle join for an unexpectedly large one. Building
+    the plan runs no job. An eval side with no size statistics (rows
+    from ``createDataFrame``) plans as a shuffle join and only turns
+    into a broadcast at runtime, after the training side's shingle
+    exchange has run.
 
     Returns (id, common_shingles, contaminated) for EVERY input row —
     keep/filter decisions stay with the caller.
@@ -972,15 +883,8 @@ def decontaminate(
         .select("shh")
         .distinct()
     )
-    if broadcast is None:
-        # one pass over the (small) eval corpus decides the join
-        # strategy; the checkpoint keeps the join from shingling the
-        # eval side a second time
-        ev = ev.localCheckpoint(eager=False)
-        broadcast = ev.count() <= broadcast_max_shingles
-    right = F.broadcast(ev) if broadcast else ev.hint("shuffle_hash")
     hits = (
-        train.join(right, "shh")
+        train.join(ev, "shh")
         .groupBy("id")
         .agg(F.count_distinct(F.col("shh")).alias("common_shingles"))
     )

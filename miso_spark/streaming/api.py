@@ -143,12 +143,14 @@ def _sessionize_group(
     # Vectorized ns→µs conversion (r15, guide §4.2): the former per-row
     # pd.Timestamp(ts).value generator paid Python object construction
     # per event; astype("int64")//1000 floors identically (same ns
-    # epoch, same floor division).
+    # epoch, same floor division). The int64 cast counts in the column's
+    # own unit, so coerce to ns first: a datetime64[us] column would
+    # otherwise come out in ms and every gap would look 1000× shorter.
+    # as_unit (not astype) keeps a tz-aware column working too.
     stamps: list[int] = []
     for pdf in pdfs:
-        stamps.extend(
-            (pd.to_datetime(pdf["ts"]).astype("int64") // 1000).tolist()
-        )
+        ns = pd.to_datetime(pdf["ts"]).dt.as_unit("ns")
+        stamps.extend((ns.astype("int64") // 1000).tolist())
 
     out = []
     for us in sorted(stamps):

@@ -723,9 +723,9 @@ def programs(draw):
             else:
                 sql = f"SELECT {', '.join(sels)} FROM ({sql}) s{step_i}"
                 sqd = f"SELECT {', '.join(sels_d)} FROM ({sqd}) s{step_i}"
-            cols = {a: NUM for a in picked}
-            for k in bys:
-                cols[k] = NUM if k in nums else STR
+            # group keys keep their type: a BOOL key stays out of the
+            # string arms (DuckDB has no contains(BOOLEAN, ...))
+            cols = {a: NUM for a in picked} | {k: cols[k] for k in bys}
         elif kind == "distinct":
             arr_live = False  # explicit select list drops it (both sides)
             keep = sorted(

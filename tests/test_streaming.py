@@ -111,33 +111,36 @@ def test_rollup_partials_merge_to_batch_answer(spark, tmp_path):
     assert got == expected
 
 
+class _FakeGroupState:
+    """The slice of GroupState that ``_sessionize_group`` touches."""
+
+    def __init__(self, value, timed_out=False):
+        self._value = value
+        self.exists = value is not None
+        self.hasTimedOut = timed_out
+        self.removed = False
+        self.updated = None
+
+    @property
+    def get(self):
+        return self._value
+
+    def remove(self):
+        self.removed = True
+
+    def update(self, v):
+        self.updated = v
+
+    def setTimeoutDuration(self, ms):
+        self.rearmed = True
+
+
 def test_sessionize_timeout_flushes_idle_session():
     """Processing-time timeout invocation (no new data) must emit the
     buffered session and drop the state — not silently re-arm."""
     from miso_spark.streaming.api import _sessionize_group
 
-    class FakeState:
-        def __init__(self, value):
-            self._value = value
-            self.exists = value is not None
-            self.hasTimedOut = True
-            self.removed = False
-            self.updated = None
-
-        @property
-        def get(self):
-            return self._value
-
-        def remove(self):
-            self.removed = True
-
-        def update(self, v):
-            self.updated = v
-
-        def setTimeoutDuration(self, ms):
-            self.rearmed = True
-
-    st = FakeState((1_000_000, 2_000_000, 3))
+    st = _FakeGroupState((1_000_000, 2_000_000, 3), timed_out=True)
     out = list(_sessionize_group((42,), iter([]), st, gap_s=1800.0, use_timeout=True))
     assert st.removed and st.updated is None
     assert len(out) == 1
@@ -145,9 +148,33 @@ def test_sessionize_timeout_flushes_idle_session():
     assert (row["user_id"], row["n_events"]) == (42, 3)
 
     # timed-out key with no buffered session: just clean up
-    st2 = FakeState(None)
+    st2 = _FakeGroupState(None, timed_out=True)
     out2 = list(_sessionize_group((7,), iter([]), st2, gap_s=1800.0, use_timeout=True))
     assert st2.removed and out2 == []
+
+
+def test_sessionize_gap_is_unit_independent():
+    """Events one hour apart are two sessions under a 30-minute gap,
+    whatever the timestamp column's unit: a datetime64[us] column must
+    split exactly like datetime64[ns] (an int64 cast of a [us] column
+    counts microseconds, which read as nanoseconds shrinks every gap
+    1000× and merges the sessions)."""
+    import pandas as pd
+
+    from miso_spark.streaming.api import _sessionize_group
+
+    stamps = pd.Series(pd.to_datetime(["2024-01-01 00:00", "2024-01-01 01:00"]))
+    for unit in ("ns", "us"):
+        pdf = pd.DataFrame({"ts": stamps.astype(f"datetime64[{unit}]")})
+        st = _FakeGroupState(None)
+        out = list(_sessionize_group((5,), iter([pdf]), st, gap_s=1800.0))
+        assert len(out) == 1, unit
+        row = out[0].iloc[0]
+        assert (row["session_start"], row["session_end"], row["n_events"]) == (
+            stamps[0], stamps[0], 1
+        ), unit
+        start_us = 1_704_070_800_000_000  # 2024-01-01 01:00 UTC in µs
+        assert st.updated == (start_us, start_us, 1), unit
 
 
 def test_tee_stream_side_write(spark, events_stream_dir, tmp_path):
