@@ -18,6 +18,7 @@ from miso_spark import plan as P
 from miso_spark.exprs import compile_expr
 from miso_spark.fields import FieldPath
 from miso_spark.sources import CAP_RAW, CAP_WRITE, SourceRegistry
+from miso_spark.sources.dynamic_filter import DEFAULT_MAX_DISTINCT
 
 #: miso names the bare `count` step's output column "Count"
 #: (miso-workflow-types/src/log.rs:9)
@@ -329,13 +330,15 @@ class Compiler:
     #: bound (miso_spark/sources/dynamic_filter.py max_rows_bound) is
     #: at or under this
     CONNECTOR_BROADCAST_MAX_ROWS = 100_000
+    #: dynamic filtering pushes a producer's observed key values into
+    #: the other side's scan only when fewer than this many are distinct
+    DYNAMIC_FILTER_MAX_DISTINCT = DEFAULT_MAX_DISTINCT
 
     def __init__(
         self,
         registry: SourceRegistry,
         null_safe_joins: bool = True,
         dynamic_filter: bool = True,
-        dynamic_filter_max_distinct: int = 10_000,
     ):
         """``null_safe_joins`` (default True) matches the reference:
         null join keys match each other (its hash join hashes
@@ -356,7 +359,6 @@ class Compiler:
         #: observed key values into the other side's scan when a bound
         #: proves the producer small
         self.dynamic_filter = dynamic_filter
-        self.dynamic_filter_max_distinct = dynamic_filter_max_distinct
         #: observability: one record per applied dynamic filter. A
         #: deque(maxlen) is append-safe under the server's concurrent
         #: request threads AND self-trimming — the previous list +
@@ -1041,7 +1043,7 @@ class Compiler:
         values, join.rs:310) — bounded at max_distinct + 1 so an
         underestimated bound degrades to no-filter, never to an
         unbounded driver collect."""
-        cap = self.dynamic_filter_max_distinct
+        cap = self.DYNAMIC_FILTER_MAX_DISTINCT
         rows = (
             df.select(FieldPath.parse(field).to_column().alias("__key"))
             .distinct()
@@ -1100,7 +1102,7 @@ class Compiler:
         rb = max_distinct_count(
             join.right_on, sub.steps[1:], self._stats_get((sub.steps[0], rsrc))
         )
-        d = decide(join.how, lb, rb, self.dynamic_filter_max_distinct)
+        d = decide(join.how, lb, rb, self.DYNAMIC_FILTER_MAX_DISTINCT)
         if d is None or d[0] or d[1]:
             # producer-left runs through _join's hook; negated plans
             # are never executed (dynamic_filter.py divergence 1)
@@ -1154,7 +1156,7 @@ class Compiler:
         rb = max_distinct_count(
             step.right_on, sub.steps[1:], self._stats_get((sub.steps[0], rsrc))
         )
-        d = decide(step.how, lb, rb, self.dynamic_filter_max_distinct)
+        d = decide(step.how, lb, rb, self.DYNAMIC_FILTER_MAX_DISTINCT)
         if d is None or not d[0] or d[1]:
             return None
         scan_field = resolve_field_to_scan(step.right_on, sub.steps[1:])

@@ -6,13 +6,19 @@ Scale design (100 TB):
 - ngram-jaccard: inverted-index join on shingles (never a cross join);
   shingles are hashed to longs before the shuffle so the exchange
   carries (long, id) pairs only.
-- minhash-LSH: per-row signature via built-in xxhash64 (no UDF), then
+- minhash-LSH: per-doc signature via built-in xxhash64 (no UDF), then
   a groupBy per band on a banded signature hash; candidate pairs are
   verified with exact Jaccard. Shuffle volume = rows × bands longs.
-- simhash: 64-bit signature from word hashes via transform/aggregate
-  (JVM lambda functions), bucketed by 16-bit chunks for candidates.
+  The row-local form (``with_minhash_signature``, used by the stream)
+  computes the same signature without a shuffle.
+- simhash: 64-bit signature from word hashes via one 64-column vote
+  aggregate, bucketed by block combinations for candidates.
 - embedding: blocked cosine join (same LSH/label block), zip_with dot
   products — no Python in the loop.
+
+Every shingle and signature here comes from ``_words``,
+``_shingle_starts``, ``_shingle_hash`` and ``_family``; batch and
+streaming dedup share them, so both sign a document identically.
 """
 
 from __future__ import annotations
@@ -26,12 +32,34 @@ from miso_spark.functions.text import normalize
 
 
 def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of the normalized text (distinct)."""
+    """Word n-gram shingles of the normalized text (distinct) — the
+    string-level reference the hashed shingle forms are tested against."""
     w = F.split(normalize(text), " ")
     idx = F.sequence(F.lit(0), F.greatest(F.size(w) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i + 1, n)))
     )
+
+
+def _words(text: Column) -> Column:
+    return F.split(normalize(text), " ")
+
+
+def _shingle_starts(words: Column, n: int) -> Column:
+    """0-based start of every word n-gram: 0..max(m−n, 0), so a doc
+    shorter than ``n`` words keeps one partial shingle (its whole
+    text), matching ``shingles()``."""
+    return F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
+
+
+def _shingle_hash(words: Column, start: Column, n: int) -> Column:
+    return F.xxhash64(F.concat_ws(" ", F.slice(words, start + 1, n)))
+
+
+def _family(shh: Column, k: int) -> Column:
+    """MinHash family ``k``: the shingle hash re-mixed with seed ``k`` —
+    long-only arithmetic, no string building per family."""
+    return F.xxhash64(shh, F.lit(k))
 
 
 def _hashed_shingle_rows(
@@ -43,52 +71,103 @@ def _hashed_shingle_rows(
     Shape (r15, guide §2.4 remove-shuffles): keep the word array on the
     row, explode the START-INDEX sequence, and build each shingle with
     per-row ``slice`` + ``concat_ws`` — plain codegen expressions, no
-    per-element lambda. The previous form exploded words and used a
-    ``lead`` window to gather each shingle's tail, which cost a full
-    Exchange(id) + per-partition Sort of the exploded WORD table before
-    any consumer's own shuffle. Here zero exchanges happen before the
-    consumer's aggregation; the Generate is pipelined inside one
-    codegen stage, so the word array never crosses an exchange either.
-    Index semantics match ``shingles()`` exactly: starts 0..max(m−n, 0),
-    so docs shorter than ``n`` words keep one partial shingle (their
-    whole text); NULL text yields no rows (the old explode-of-null
-    behavior, pinned by the isNotNull guard — without it the index
-    sequence over ``greatest(NULL, 0)`` would emit one empty shingle).
+    per-element lambda. Zero exchanges happen before the consumer's
+    aggregation; the Generate is pipelined inside one codegen stage, so
+    the word array never crosses an exchange either. NULL text yields
+    no rows (the isNotNull guard — without it the index sequence over
+    ``greatest(NULL, 0)`` would emit one empty shingle).
     """
-    wa = F.split(normalize(F.col(text_col)), " ")
     return (
-        df.select(F.col(id_col).alias("id"), wa.alias("__wa"))
+        df.select(F.col(id_col).alias("id"), _words(F.col(text_col)).alias("__wa"))
         .filter(F.col("__wa").isNotNull())
         .select(
             "id",
             "__wa",
-            F.explode(
-                F.sequence(F.lit(0), F.greatest(F.size("__wa") - n, F.lit(0)))
-            ).alias("__p"),
+            F.explode(_shingle_starts(F.col("__wa"), n)).alias("__p"),
         )
-        .select(
-            "id",
-            F.xxhash64(
-                F.concat_ws(" ", F.slice(F.col("__wa"), F.col("__p") + 1, n))
-            ).alias("shh"),
-        )
+        .select("id", _shingle_hash(F.col("__wa"), F.col("__p"), n).alias("shh"))
     )
 
 
-def shingle_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """Distinct hashed word-n-gram shingles as ROWS ``(id, shh)``.
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """Per-doc distinct shingle-hash SET ``(id, arr)`` in ONE exchange
+    (r15, guide §2.4): collect_set over the raw (possibly-duplicated)
+    shingle rows dedups and gathers at once. Set order is
+    partition-dependent; no consumer is order-sensitive.
 
-    ``_hashed_shingle_rows`` (index-explode + slice, zero pre-shuffle
-    work — see its docstring) followed by one distinct; partial
-    aggregation dedups repeated shingles map-side before the exchange.
-    The r14 form (explode words → window ``lead``) paid an extra full
-    Exchange + Sort of the exploded word table before this distinct.
-    Docs shorter than ``n`` words keep one partial shingle (their whole
-    text), matching ``shingles()``.
+    Lazily localCheckpointed so every consumer reads it instead of
+    re-running the shingle pipeline. Its total bytes ≈ the corpus's
+    distinct-shingle count (ADVICE r14); localCheckpoint blocks are
+    disk-backed (spill, not OOM) but NON-REPLICATED and lineage is
+    truncated: on a real cluster an executor/decommission loss fails
+    the query instead of recomputing.
     """
-    return _hashed_shingle_rows(df, text_col, id_col, n).distinct()
+    return (
+        _hashed_shingle_rows(df, text_col, id_col, n)
+        .groupBy("id")
+        .agg(F.collect_set("shh").alias("arr"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _minhash_rows(arrs: DataFrame, num_hashes: int) -> DataFrame:
+    """Batch MinHash signature table ``(id, m0..m{k-1})`` from the
+    shingle-set table: k family mins in one codegen HashAggregate over
+    the re-exploded sets (partition-local: ``arrs`` is already
+    hash-distributed by id, so the explode → groupBy(id) needs no
+    exchange). Kept apart from the collect_set aggregate because
+    collect_set forces ObjectHashAggregate, whose sort-based fallback
+    would drag the mins out of codegen (measured 2.7× the CPU).
+    Lazily localCheckpointed (N rows × k longs)."""
+    return (
+        arrs.select("id", F.explode("arr").alias("shh"))
+        .groupBy("id")
+        .agg(*[F.min(_family(F.col("shh"), s)).alias(f"m{s}") for s in range(num_hashes)])
+        .localCheckpoint(eager=False)
+    )
+
+
+def with_minhash_signature(
+    df: DataFrame,
+    text_col: str = "text",
+    num_hashes: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """``df`` + ``sig``: the MinHash signature as ``array<long>``,
+    computed row-locally — no window, no shuffle, so it runs on
+    STREAMING DataFrames (``near_dedup_stream``), where the batch
+    explode + groupBy form would need unbounded keyed state.
+
+    ``sig[k]`` equals ``minhash_lsh_pairs``' ``m{k}`` for every
+    non-NULL text (min over the shingle multiset equals min over the
+    set). NULL text has no batch row; here it signs the one empty
+    shingle, like ``""``.
+
+    Staged so the expensive per-row pieces evaluate ONCE (guide §1.2
+    per-task work), the way ``_hashed_shingle_rows`` stages them:
+    projection 1 splits the normalized text into words; projection 2
+    builds the hashed-shingle array (slice + concat + string hash);
+    projection 3 derives all families from those longs. Each
+    multi-referenced non-cheap alias blocks CollapseProject from
+    re-inlining it into its consumer's lambda, where it would run once
+    per shingle or per family: the word split inlined into the shingle
+    lambda re-ran regexp_replace + split per shingle (6.6-8.6 s vs
+    1.4-1.7 s staged over 5 000 sf0.1 documents at num_hashes=32,
+    ``local[2]``), and the shingle array inlined into each family
+    measured 26.7 s vs 3.4 s."""
+    df = df.withColumn("__wa", _words(F.col(text_col)))
+    wa = F.col("__wa")
+    df = df.withColumn(
+        "__shh",
+        F.transform(_shingle_starts(wa, shingle_n), lambda p: _shingle_hash(wa, p, shingle_n)),
+    )
+    sig = F.array(
+        *[
+            F.array_min(F.transform(F.col("__shh"), lambda h: _family(h, k)))
+            for k in range(num_hashes)
+        ]
+    )
+    return df.withColumn("sig", sig).drop("__wa", "__shh")
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -116,26 +195,13 @@ def ngram_jaccard_pairs(
     shingle hash, count common shingles per pair, then
     |A∩B| / (|A| + |B| − |A∩B|).
 
-    Scale caveat (ADVICE r14): the per-doc shingle SET table is
-    computed once and lazily localCheckpointed so both join sides read
-    it instead of re-running the shingle pipeline. Unlike the
-    minhash/simhash SIGNATURE tables (N rows of fixed width — tiny at
-    any scale) this table's total bytes ≈ the corpus's distinct-shingle
-    count. localCheckpoint blocks are disk-backed (spill, not OOM) but
-    NON-REPLICATED and lineage is truncated: on a real cluster an
-    executor/decommission loss fails the query instead of recomputing.
+    The per-doc shingle SET table (``_shingle_sets``) is computed once;
+    ``size(arr)`` supplies the per-doc count, and both join sides
+    explode it back to rows. Unlike the minhash/simhash SIGNATURE tables
+    (N rows of fixed width) its bytes grow with the corpus — see
+    ``_shingle_sets`` for the checkpoint caveat.
     """
-    # per-doc shingle SET in ONE exchange (r15, guide §2.4): collect_set
-    # over the raw (possibly-duplicated) shingle rows replaces the r14
-    # chain of distinct (Exchange(id,shh)) + window count (Exchange(id)
-    # + Sort) — size(arr) supplies the per-doc count for free, and both
-    # join sides explode the checkpointed set table back to rows
-    arrs = (
-        _hashed_shingle_rows(df, text_col, id_col, n)
-        .groupBy("id")
-        .agg(F.collect_set("shh").alias("arr"))
-        .localCheckpoint(eager=False)
-    )
+    arrs = _shingle_sets(df, text_col, id_col, n)
     sh = arrs.select("id", F.size("arr").alias("sz"), F.explode("arr").alias("shh"))
     a, b = sh.alias("a"), sh.alias("b")
     return (
@@ -154,29 +220,6 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """Distinct word-n-gram shingles hashed to longs — the compact
-    representation every downstream dedup stage works from (string
-    shingles never leave the first projection)."""
-    return F.transform(shingles(text, n), lambda s: F.xxhash64(s))
-
-
-def minhash_signature_from_hashes(shh: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature as array<long> from pre-hashed shingles:
-    family i re-mixes each shingle hash with xxhash64(h, i) — long-only
-    arithmetic, no string building per family."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(F.transform(shh, lambda h: F.xxhash64(h, seed))),
-    )
-
-
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """MinHash signature as array<long>, k independent hash families via
-    seed-mixed xxhash64 — built-ins only, no UDF."""
-    return minhash_signature_from_hashes(shingle_hashes(text, shingle_n), num_hashes)
 
 
 def _cap_buckets(df: DataFrame, keys: list[str], max_bucket_size: int | None) -> DataFrame:
@@ -263,7 +306,7 @@ def minhash_lsh_pairs(
     (ObjectHashAggregate — sort-fallback-bound, cheap when it carries
     no other expressions) and the 16 seed-mixed mins (pure codegen
     HashAggregate) stay in their fast paths, and the expensive word
-    pipeline (explode + window lead + distinct) runs exactly once.
+    pipeline runs exactly once.
     Measured at sf1 (local[32], 50k docs): 1.9 s / 53 s CPU vs 23 s /
     406 s CPU for the r11 inverted-index plan — and the sf0.1→sf1
     scaling exponent drops from ~1.0 to ~flat.
@@ -284,39 +327,8 @@ def minhash_lsh_pairs(
         )
     rows_per_band = num_hashes // bands
 
-    # stages 1+2a fused (r15, guide §2.4): per-doc shingle SET straight
-    # from the raw (possibly-duplicated) shingle rows — collect_set
-    # dedups and gathers in ONE exchange on id. The r14 chain was
-    # shingle_rows' distinct (Exchange(id,shh) after a window's
-    # Exchange(id)+Sort) followed by a collect_list groupBy (a third
-    # exchange). Set order is partition-dependent but nothing downstream
-    # is order-sensitive (min over elements, array_intersect sizes).
-    # Kept free of other aggregate expressions: collect_set forces
-    # ObjectHashAggregate whose 128-key sort-based fallback would drag
-    # any sibling agg expressions out of codegen (measured 2.7× the CPU
-    # when the 16 mins rode along here).
-    arrs = (
-        _hashed_shingle_rows(df, text_col, id_col, shingle_n)
-        .groupBy("id")
-        .agg(F.collect_set("shh").alias("arr"))
-        .localCheckpoint(eager=False)
-    )
-
-    # stage 2b: minhash signature — k seed-mixed min columns in one
-    # codegen HashAggregate over the re-exploded set table (partition-
-    # local: arrs is already hash-distributed by id, so the explode →
-    # groupBy(id) needs no exchange)
-    sig = (
-        arrs.select("id", F.explode("arr").alias("shh"))
-        .groupBy("id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.col("shh"), F.lit(s))).alias(f"m{s}")
-                for s in range(num_hashes)
-            ]
-        )
-        .localCheckpoint(eager=False)
-    )
+    arrs = _shingle_sets(df, text_col, id_col, shingle_n)
+    sig = _minhash_rows(arrs, num_hashes)
 
     # per-band bucket from the signature columns, long-only hashing
     def band_bucket(b: int) -> Column:
@@ -505,43 +517,6 @@ def dedup_assignments(
     )
 
 
-def simhash(text_sql: str) -> Column:
-    """64-bit SimHash of the word multiset, as bigint.
-
-    Each word's xxhash64 votes ±1 per bit position; the sign of each
-    accumulated position becomes the output bit. Implemented as one SQL
-    higher-order expression (transform/aggregate/zip_with execute as
-    JVM lambda functions; the Python Column API can't express
-    shiftleft/shiftright with non-literal shift amounts).
-
-    ``text_sql`` is a SQL expression for the text column.
-    """
-    norm = (
-        f"split(lower(trim(regexp_replace({text_sql}, '\\\\s+', ' '))), ' ')"
-    )
-    return F.expr(
-        f"""
-        aggregate(
-          zip_with(
-            aggregate(
-              transform({norm}, w -> xxhash64(w)),
-              array_repeat(0, 64),
-              (acc, h) -> zip_with(
-                acc,
-                transform(sequence(0, 63),
-                          j -> IF((shiftright(h, j) & 1) = 1, 1, -1)),
-                (a, b) -> a + b)
-            ),
-            sequence(0, 63),
-            (v, j) -> IF(v > 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))
-          ),
-          CAST(0 AS BIGINT),
-          (acc, x) -> acc | x
-        )
-        """
-    )
-
-
 def md5_word_hash(w: Column) -> Column:
     """Lower 64 bits of md5 (the last 16 hex chars, big-endian) as a
     long — a word hash an external SQL engine can reproduce (DuckDB has
@@ -562,19 +537,19 @@ def simhash_rows(
     id_col: str = "doc_id",
     word_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
-    """``(id, sim)`` via the codegen path: explode words → word hash →
-    ONE hash aggregate with 64 bit-vote sum columns → recombine.
+    """64-bit SimHash of each doc's word multiset: ``(id, sim)``.
 
-    Semantically identical to the ``simhash()`` column expression but
-    every operator is whole-stage-codegen (the column version's nested
-    array lambdas run interpreted — fine for ad-hoc use, ~10× slower in
-    bulk). Map-side partial sums keep the shuffle at 64 ints per doc.
-    ``word_hash`` defaults to xxhash64; pass ``md5_word_hash`` for the
-    oracle-reproducible variant.
+    Each word's hash votes ±1 per bit position; the sign of each
+    accumulated position becomes the output bit. Explode words → word
+    hash → ONE hash aggregate with 64 bit-vote sum columns → recombine:
+    every operator is whole-stage-codegen (a nested-lambda column form
+    runs interpreted, ~10× slower in bulk). Map-side partial sums keep
+    the shuffle at 64 ints per doc. ``word_hash`` defaults to xxhash64;
+    pass ``md5_word_hash`` for the oracle-reproducible variant.
     """
     wrds = df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.split(normalize(F.col(text_col)), " ")).alias("w"),
+        F.explode(_words(F.col(text_col))).alias("w"),
     ).select("id", word_hash(F.col("w")).alias("h"))
     votes = wrds.groupBy("id").agg(
         *[

@@ -68,13 +68,11 @@ def _plane_signs(plane_id: int, dim: int) -> Column:
 #: plane-geometry constants, folded once per (plane_id, dim) per process
 #: — NOT data-derived state: the sign vector is a pure function of the
 #: plane id, evaluated through the exact `_plane_signs` expressions so
-#: driver constants and any executor-side fallback can never disagree
+#: the folded constants equal the per-row `_hyperplane_sign` derivation
 _PLANE_SIGN_CACHE: dict[tuple[int, int], list[float]] = {}
 
 
-def _plane_sign_values(
-    plane_ids: list[int], dim: int, spark=None
-) -> list[list[float]] | None:
+def _plane_sign_values(plane_ids: list[int], dim: int) -> list[list[float]]:
     """Fold the hyperplane sign vectors to Python constants with ONE
     1-row job (r14 optimization-round change, guide §4.1: the previous
     per-row form re-derived every plane element via interpreted
@@ -82,22 +80,17 @@ def _plane_sign_values(
     6.5× the whole bucket-assignment cost at 12 planes × dim 64).
 
     NOTE: on a cache miss this submits a 1-row Spark job at PLAN time
-    (expression building), not execution time. Session resolution:
-    the explicit ``spark`` argument (DataFrame-bearing callers pass
-    ``df.sparkSession`` — see ``with_lsh_buckets``) falls back to the
-    thread-local ``getActiveSession()``. Returns None when neither is
-    available (callers keep the expression form — identical values,
-    just slower)."""
+    (expression building), not execution time. ``SparkSession.active()``
+    resolves the session in any thread: the thread's active session,
+    else the process's default one (worker threads have no active
+    session of their own)."""
     from pyspark.sql import SparkSession
 
     missing = [p for p in plane_ids if (p, dim) not in _PLANE_SIGN_CACHE]
     if missing:
-        if spark is None:
-            spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None
         row = (
-            spark.range(1)
+            SparkSession.active()
+            .range(1)
             .select(*[_plane_signs(p, dim).alias(f"p{i}") for i, p in enumerate(missing)])
             .first()
         )
@@ -107,7 +100,8 @@ def _plane_sign_values(
 
 
 def _hyperplane_sign(vec: Column, plane_id: int, dim: int) -> Column:
-    """sign(v · h_p) as a 0/1 bit."""
+    """sign(v · h_p) as a 0/1 bit, deriving h_p per row — the reference
+    form that ``lsh_bucket``'s folded constants are tested against."""
     return F.when(_dot(vec, _plane_signs(plane_id, dim)) >= 0, F.lit(1)).otherwise(F.lit(0))
 
 
@@ -123,28 +117,22 @@ def planes_for_rows(n_rows: int, target_bucket: int = 256) -> int:
     return max(4, math.ceil(math.log2(n_rows / target_bucket)))
 
 
-def lsh_bucket(vec: Column, num_planes: int, dim: int, spark=None) -> Column:
+def lsh_bucket(vec: Column, num_planes: int, dim: int) -> Column:
     """Random-hyperplane LSH bucket id (int in [0, 2^num_planes)).
 
     The plane sign vectors are folded to literal arrays once per
     process (`_plane_sign_values` — note its plan-time 1-row job on
     first use per (plane, dim)), so the per-row work is num_planes
     dot products against constants — the same zip_with/aggregate fold
-    (bit-identical bucket ids, asserted in
+    as ``_hyperplane_sign`` (bit-identical bucket ids, asserted in
     test_pipeline_ops.test_lsh_bucket_folded_signs_match_expression_path)
     without the per-row per-element hash derivation that used to
-    dominate the stage (6.5× at 12 planes × dim 64, sf0.1 embeddings).
-    Pass ``spark`` (e.g. ``df.sparkSession``) from driver threads where
-    ``getActiveSession()`` is unset, or the build silently takes the
-    slower expression path (values stay identical)."""
-    signs = _plane_sign_values(list(range(num_planes)), dim, spark=spark)
+    dominate the stage (6.5× at 12 planes × dim 64, sf0.1 embeddings)."""
+    signs = _plane_sign_values(list(range(num_planes)), dim)
     bucket = F.lit(0)
     for p in range(num_planes):
-        if signs is None:
-            sign_bit = _hyperplane_sign(vec, p, dim)
-        else:
-            plane = F.array(*[F.lit(s) for s in signs[p]])
-            sign_bit = F.when(_dot(vec, plane) >= 0, F.lit(1)).otherwise(F.lit(0))
+        plane = F.array(*[F.lit(s) for s in signs[p]])
+        sign_bit = F.when(_dot(vec, plane) >= 0, F.lit(1)).otherwise(F.lit(0))
         bucket = bucket + F.shiftleft(sign_bit, p)
     return bucket
 
@@ -153,14 +141,7 @@ def with_lsh_buckets(
     df: DataFrame, vec_col: str = "embedding", num_planes: int = 4, dim: int = 64
 ) -> DataFrame:
     return df.withColumn(
-        "lsh_bucket",
-        # df.sparkSession: threaded callers (guide §2.6 job pools) have
-        # no thread-local active session — without it they'd silently
-        # take the 6.5×-slower expression path (ADVICE r14)
-        lsh_bucket(
-            F.col(vec_col).cast("array<double>"), num_planes, dim,
-            spark=df.sparkSession,
-        ),
+        "lsh_bucket", lsh_bucket(F.col(vec_col).cast("array<double>"), num_planes, dim)
     )
 
 

@@ -171,7 +171,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
-    (The rolling-hash/shingle variant lives in dedup.simhash.)"""
+    (The shingle and SimHash variants live in ``dedup``.)"""
     return F.md5(normalize(text))
 
 

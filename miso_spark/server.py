@@ -785,6 +785,16 @@ class MisoServer:
                         )
                         sw.write(qid, body.get("query", ""), st, error, started, end)
 
+                # every query executes inside its own Spark job group so
+                # a client disconnect can abort the in-flight jobs — the
+                # reference's CancellationToken drop-guard
+                # (http_server.rs:340-371, cancel_iter.rs). Set before
+                # parsing: source resolution runs jobs too (a parquet
+                # schema read), and they belong to this query.
+                qgroup = f"miso-query-{qid}"
+                server_self.miso.spark.sparkContext.setJobGroup(
+                    qgroup, body.get("query", "")[:100], interruptOnCancel=True
+                )
                 status("planning")
                 debounce = _parse_partial_stream(body.get("partial_stream"))
                 try:
@@ -829,14 +839,6 @@ class MisoServer:
                 self.send_header("Cache-Control", "no-cache")
                 self.send_header("X-Query-Id", qid)
                 self.end_headers()
-                # every query executes inside its own Spark job group so
-                # a client disconnect can abort the in-flight jobs — the
-                # reference's CancellationToken drop-guard
-                # (http_server.rs:340-371, cancel_iter.rs)
-                qgroup = f"miso-query-{qid}"
-                server_self.miso.spark.sparkContext.setJobGroup(
-                    qgroup, body.get("query", "")[:100], interruptOnCancel=True
-                )
                 # Runtime failures after this point can't become an HTTP
                 # error code (headers are gone); emit an SSE error frame
                 # instead, like the reference surfaces mid-stream errors

@@ -299,81 +299,6 @@ def dedup_stream(
     return out.dropDuplicates(["content_hash"])
 
 
-def minhash_signature_col(text_col, num_hashes: int = 32, shingle_n: int = 3):
-    """Row-local MinHash signature as an ``array<long>`` column, built
-    entirely from JVM higher-order functions — no window, no shuffle —
-    so it works on STREAMING DataFrames (the batch path in
-    functions/dedup.py uses the codegen-friendlier explode+aggregate
-    form, which streaming can't run without unbounded keyed state).
-
-    Single-Column convenience form: prefer :func:`with_minhash_signature`
-    on a DataFrame — the staged projections there evaluate the shingle
-    array and the per-shingle base hash ONCE per row, while this inlined
-    expression tree re-evaluates them inside every family (num_hashes×
-    the shingle-build cost; measured 26.7 s vs 3.4 s over sf0.1
-    documents at num_hashes=32).
-
-    Each of the ``num_hashes`` components is ``min(xxhash64(xxhash64(
-    shingle), k))`` over the doc's word-``shingle_n``-gram shingles —
-    the same seed-remixed-long family as the batch pipeline's
-    ``minhash_signature_from_hashes`` (min over the multiset equals min
-    over the set, so no distinct pass is needed). Short docs keep their
-    partial tail shingles — self-consistent within the streaming
-    operator; signatures are NOT byte-compatible with the batch
-    pipeline's rows (different shingle normalization), only
-    behaviorally equivalent.
-    """
-    shh = _shingle_hashes_col(text_col, shingle_n)
-    return F.array(
-        *[
-            F.array_min(F.transform(shh, lambda h: F.xxhash64(h, F.lit(k))))
-            for k in range(num_hashes)
-        ]
-    )
-
-
-def _shingle_hashes_col(text_col, shingle_n: int):
-    """Word-``shingle_n``-gram shingles of the whitespace-normalized
-    text, hashed to longs — one ``array<long>`` per row, no shuffle."""
-    norm = F.lower(F.trim(F.regexp_replace(text_col, r"\s+", " ")))
-    words = F.split(norm, " ")
-    n_sh = F.greatest(F.size(words) - (shingle_n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n_sh),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(words, i, shingle_n))),
-    )
-
-
-def with_minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "sig",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """``df`` + MinHash signature column, staged so the expensive
-    per-row pieces evaluate ONCE (r15, guide §1.2 per-task work):
-    projection 1 computes the hashed-shingle array (split + slice +
-    concat + string hash); projection 2 derives all ``num_hashes``
-    families from those LONGS with seed-remixed ``xxhash64(h, k)`` —
-    cheap long hashing instead of ``num_hashes`` re-builds of the
-    shingle array and re-hashes of every shingle STRING. The
-    multi-referenced non-cheap alias blocks CollapseProject from
-    re-inlining the array into each family (the with_quality pattern).
-    Values equal :func:`minhash_signature_col` exactly (same staged
-    family)."""
-    df = df.withColumn("__shh", _shingle_hashes_col(F.col(text_col), shingle_n))
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(F.col("__shh"), lambda h: F.xxhash64(h, F.lit(k)))
-            )
-            for k in range(num_hashes)
-        ]
-    )
-    return df.withColumn(out_col, sig).drop("__shh")
-
-
 _NEAR_DUP_SCHEMA = StructType(
     [
         StructField("id_a", LongType()),
@@ -494,8 +419,11 @@ def near_dedup_stream(
     MinHash signature agrees with a previously-ingested doc's at ≥
     ``threshold``.
 
-    Plan shape (all state executor-side, keyed by LSH bucket):
-    signature + per-band bucket hashes compute row-locally in JVM
+    Plan shape (all state executor-side, keyed by LSH bucket): the
+    MinHash signature shared with the batch pipeline
+    (``functions.dedup.with_minhash_signature``: ``sig[k]`` equals
+    ``minhash_lsh_pairs``' ``m{k}`` for the same text and shingle size)
+    and the per-band bucket hashes compute row-locally in JVM
     expressions; one shuffle groups by ``(band, bucket)``;
     ``applyInPandasWithState`` keeps ≤ ``max_bucket_size`` signatures
     per bucket and compares each arrival against them — never all
@@ -517,11 +445,13 @@ def near_dedup_stream(
     ``trigger(processingTime=...)`` and poll progress rather than
     ``processAllAvailable()`` (which would block forever).
     """
+    from miso_spark.functions.dedup import with_minhash_signature
+
     rows = num_hashes // bands
     banded = (
         with_minhash_signature(
             docs.select(F.col(id_col).cast("long").alias("doc_id"), F.col(text_col)),
-            text_col, "sig", num_hashes, shingle_n,
+            text_col, num_hashes, shingle_n,
         )
         .select("doc_id", "sig")
         .select(

@@ -27,7 +27,7 @@ def emb(spark):
 
 
 def test_simhash_identical_and_near(spark):
-    from miso_spark.functions.dedup import simhash
+    from miso_spark.functions.dedup import simhash_rows
 
     df = spark.createDataFrame(
         [
@@ -38,7 +38,7 @@ def test_simhash_identical_and_near(spark):
         ],
         ["id", "text"],
     )
-    rows = {r["id"]: r["s"] for r in df.select("id", simhash("text").alias("s")).collect()}
+    rows = {r["id"]: r["sim"] for r in simhash_rows(df, "text", "id").collect()}
     assert rows[1] == rows[2]
     ham13 = bin(rows[1] ^ rows[3]).count("1")
     ham14 = bin(rows[1] ^ rows[4]).count("1")
@@ -335,9 +335,9 @@ def test_minhash_lsh_recall_vs_exact(docs):
 
 
 def test_minhash_deterministic(docs):
-    from miso_spark.functions.dedup import minhash_signature
+    from miso_spark.functions.dedup import with_minhash_signature
 
-    one = docs.limit(5).select("doc_id", minhash_signature(F.col("text")).alias("sig"))
+    one = with_minhash_signature(docs.limit(5).select("doc_id", "text"))
     a = {r["doc_id"]: r["sig"] for r in one.collect()}
     b = {r["doc_id"]: r["sig"] for r in one.collect()}
     assert a == b
@@ -1426,6 +1426,34 @@ def test_lsh_bucket_folded_signs_match_expression_path(spark, emb):
     assert diff == 0
 
 
+def test_lsh_bucket_folds_signs_in_worker_thread(spark):
+    """A worker thread has no thread-local active session; lsh_bucket
+    must still fold the plane signs to constants instead of deriving
+    them per row (~6.5× slower). Uses a (plane, dim) no other test
+    folds, so the plane cache cannot hide the session lookup."""
+    import threading
+
+    from miso_spark.functions import similarity as sim
+
+    dim = 5
+    for p in range(3):
+        sim._PLANE_SIGN_CACHE.pop((p, dim), None)
+    out: dict = {}
+
+    def build():
+        try:
+            out["col"] = sim.lsh_bucket(F.col("v"), 3, dim)
+        except Exception as e:  # noqa: BLE001 — reported on the test thread
+            out["err"] = e
+
+    t = threading.Thread(target=build)
+    t.start()
+    t.join(timeout=120)
+    assert "err" not in out, out.get("err")
+    assert "xxhash64" not in str(out["col"]).lower()
+    assert all((p, dim) in sim._PLANE_SIGN_CACHE for p in range(3))
+
+
 def test_token_counts_match_array_forms(spark):
     """regexp_count rewrites (token_count, bpe_token_count, the
     with_quality punct count) must agree with the materializing array
@@ -1494,31 +1522,35 @@ def test_embedding_pair_cosine_matches_per_pair_norms(spark, emb):
     assert key(got) == key(want)
 
 
-def test_shingle_rows_matches_shingles_column_form(spark):
-    """r15: shingle_rows switched from explode-words + lead window to
-    index-explode + per-row slice. Pin that the row form equals the
-    reference ``shingles()`` column form (posexploded, hashed, distinct)
-    on every edge: normal docs, docs shorter than n (one partial
-    shingle), empty text (one empty shingle), repeated shingles
-    (dedup), and whitespace runs. NULL text is the one documented
-    divergence: the row form emits NO rows (both the old window form
-    and the r15 rewrite — the behavior the DuckDB oracle pins), while
-    the column form's sequence-over-null yields one empty shingle."""
-    from miso_spark.functions.dedup import shingle_rows, shingles
+#: edge texts for the shingle/signature pins: normal, shorter than n
+#: (one partial shingle), empty (one empty shingle), repeated shingles,
+#: NULL, whitespace runs, mixed case
+_SHINGLE_EDGE_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "short doc"),
+    (3, ""),
+    (4, "a b a b a b a b a b"),
+    (5, None),
+    (6, "  spaced   out\ttabs\nnewlines  "),
+    (7, "The  QUICK brown\tFox jumps OVER the lazy\ndog"),
+]
 
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "short doc"),
-            (3, ""),
-            (4, "a b a b a b a b a b"),
-            (5, None),
-            (6, "  spaced   out\ttabs\nnewlines  "),
-        ],
-        "doc_id long, text string",
-    )
+
+def test_shingle_rows_matches_shingles_column_form(spark):
+    """The distinct hashed shingle rows (index-explode + per-row slice,
+    the form every batch dedup operator builds on) equal the reference
+    ``shingles()`` column form (exploded, hashed, distinct) on every
+    edge: normal docs, docs shorter than n (one partial shingle), empty
+    text (one empty shingle), repeated shingles (dedup), and whitespace
+    runs. NULL text is the one documented divergence: the row form
+    emits NO rows (the behavior the DuckDB oracle pins), while the
+    column form's sequence-over-null yields one empty shingle."""
+    from miso_spark.functions.dedup import _hashed_shingle_rows, shingles
+
+    df = spark.createDataFrame(_SHINGLE_EDGE_DOCS, "doc_id long, text string")
     got = sorted(
-        (r["id"], r["shh"]) for r in shingle_rows(df, "text", "doc_id", 3).collect()
+        (r["id"], r["shh"])
+        for r in _hashed_shingle_rows(df, "text", "doc_id", 3).distinct().collect()
     )
     ref = sorted(
         (r["id"], r["shh"])
@@ -1537,25 +1569,30 @@ def test_shingle_rows_matches_shingles_column_form(spark):
     assert sum(1 for i, _ in got if i == 2) == 1  # short doc: one partial shingle
 
 
-def test_with_minhash_signature_equals_column_form(spark):
-    """r15: the staged two-projection signature build (hashed shingles
-    once, then seed-remixed long families) must produce the exact
-    arrays of the single-Column convenience form."""
-    from miso_spark.streaming.api import minhash_signature_col, with_minhash_signature
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"), (2, "tiny"), (3, "")],
-        "doc_id long, text string",
+def test_stream_signature_equals_batch_minhash(spark):
+    """Stream and batch dedup sign a document identically: the
+    row-local signature ``near_dedup_stream`` uses
+    (``with_minhash_signature``) equals ``minhash_lsh_pairs``' per-doc
+    mins ``m0..m15`` byte for byte on every non-NULL edge text. The one
+    divergence is NULL text: the batch path emits no row, the stream
+    signs the one empty shingle (the same signature as "")."""
+    from miso_spark.functions.dedup import (
+        _minhash_rows,
+        _shingle_sets,
+        with_minhash_signature,
     )
-    staged = {
+
+    df = spark.createDataFrame(_SHINGLE_EDGE_DOCS, "doc_id long, text string")
+    stream = {
         r["doc_id"]: list(r["sig"])
-        for r in with_minhash_signature(df, "text", "sig", 8, 3).collect()
+        for r in with_minhash_signature(df, "text", 16, 3).collect()
     }
-    inline = {
-        r["doc_id"]: list(r["sig"])
-        for r in df.select(
-            "doc_id", minhash_signature_col(F.col("text"), 8, 3).alias("sig")
-        ).collect()
+    batch = {
+        r["id"]: [r[f"m{k}"] for k in range(16)]
+        for r in _minhash_rows(_shingle_sets(df, "text", "doc_id", 3), 16).collect()
     }
-    assert staged == inline
-    assert all(len(v) == 8 for v in staged.values())
+    assert set(batch) == {1, 2, 3, 4, 6, 7}  # NULL text: no batch row
+    assert {i: stream[i] for i in batch} == batch
+    assert stream[5] == stream[3]  # NULL signs like the empty text
+    assert all(len(v) == 16 for v in stream.values())
+    assert stream[7] == stream[1]  # case and whitespace runs normalize away

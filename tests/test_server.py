@@ -5,6 +5,7 @@ view management."""
 from __future__ import annotations
 
 import json
+import time
 import urllib.request
 
 import pytest
@@ -253,6 +254,31 @@ def test_query_status_collection(spark):
         assert rows["q-bad"]["error"]  # the parse failure is recorded
     finally:
         srv.shutdown()
+
+
+def test_query_jobs_all_run_in_query_job_group(server, spark):
+    """Source resolution runs a Spark job (the parquet schema read);
+    it must run inside the query's ``miso-query-<id>`` group like the
+    rest of the query, so a client disconnect cancels it and per-query
+    counts include it. A parquet-backed /query adds no job without a
+    group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    resp = _post(server, "/query", {"query": "t.region | count"})
+    assert b"event: done" in resp.read()
+    # fence: the status store applies job events in submission order,
+    # so once this later job is visible every query job is too
+    sc.setJobGroup("test-job-group-fence", "fence")
+    try:
+        spark.range(1).count()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup("test-job-group-fence"):
+            assert time.monotonic() < deadline, "fence job never registered"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
 
 
 def test_client_disconnect_cancels_job_group(server, spark):
