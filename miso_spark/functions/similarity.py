@@ -214,16 +214,6 @@ def lsh_probe_budget(num_planes: int) -> int:
     return 1 + num_planes + num_planes * (num_planes - 1) // 2
 
 
-def expected_plane_collision(cos_sim: float) -> float:
-    """Per-plane collision probability ``1 - θ/π`` for a neighbor at
-    the given cosine similarity — the closed-form lever behind the
-    recall envelope (callers can estimate expected recall BEFORE a
-    full run from a sampled neighbor cosine)."""
-    import math
-
-    return 1.0 - math.acos(max(-1.0, min(1.0, cos_sim))) / math.pi
-
-
 def lsh_topk(
     df: DataFrame,
     query_vec: list[float],

@@ -17,8 +17,9 @@ Connector kinds:
 - ``MemorySource``: in-session named DataFrames
   (parity: miso-connectors/src/memory.rs).
 - ``QuickwitSource`` / ``ElasticsearchSource`` / ``SplunkSource``
-  (miso_spark.sources.external): register + declare capabilities, fail
-  at connect time — the services aren't reachable in this environment.
+  (miso_spark.sources.external): send negotiated pushdown requests to
+  the live service over HTTP (Quickwit and Elasticsearch share one
+  ES-protocol client); an unreachable service fails at connect time.
 """
 
 from __future__ import annotations

@@ -5,11 +5,9 @@ Behavioral parity with the reference's pushdown translation
 whole-or-nothing per filter expression — ``None`` means the connector
 can't absorb this predicate and the engine keeps it (the same contract
 as ``Connector::apply_filter`` returning None). Quickwit accepts the
-same query-DSL subset, so both external skeletons share this module.
-
-This is the piece of the external connectors that needs no live
-service: the translation is pure and unit-tested; a reachable cluster
-would receive its output in the ``query`` body of ``/_search``.
+same query-DSL subset, so both connectors share this module; the
+compiled filter goes out in the ``query`` body of their ``_search``
+and ``_count`` requests.
 """
 
 from __future__ import annotations

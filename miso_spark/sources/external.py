@@ -1,25 +1,29 @@
 """External service connectors: Quickwit / Elasticsearch / Splunk.
 
 Parity: miso-connectors/src/{quickwit.rs, elasticsearch.rs, splunk/}.
-The services are not reachable from this environment, so these are
-honest skeletons: they **register** like any source, **declare** the
-same pushdown capability surface their reference counterparts implement
-(the connector's ``apply_*`` methods — quickwit.rs:1268-1552,
-elasticsearch.rs:1264-1487, splunk/mod.rs:1182-1380), and **fail at
-connect time** with a precise error when a query first touches them.
+Each connector registers like any source, declares the pushdown
+surface of its reference counterpart (the connector's ``apply_*``
+methods — quickwit.rs:1268-1552, elasticsearch.rs:1264-1487,
+splunk/mod.rs:1182-1380 — mirrored by
+:class:`~miso_spark.sources.pushdown.PushHandle` and
+:class:`~miso_spark.sources.spl.SplunkHandle`), sends the negotiated
+request to the live service over HTTP and reads the returned rows
+through ``spark.read.json``. An unreachable service fails at connect
+time with a precise error.
 
-The Spark-side integration path, when a service is reachable, is
-documented per class: each maps to an existing Spark DataSource
-(``org.elasticsearch.spark.sql`` for ES, REST/Arrow ingest for
-Quickwit, the Splunk REST export API via a JSON-lines reader) and the
-declared capabilities become the predicate/projection/limit parameters
-of that source — the same negotiation the reference performs through
-``apply_filter``/``apply_project``/``apply_limit``.
+Quickwit is reached through its ES-compatible routes, so Quickwit and
+Elasticsearch share one ES-protocol client (:class:`EsProtocolSource`)
+and differ only in wire-dialect class data. Splunk runs its
+search-job protocol. With ``slices > 1`` the hit fetch runs on Spark
+executors: sliced scrolls for the ES protocol, offset ranges of the
+finished job for Splunk.
 """
 
 from __future__ import annotations
 
+import json
 import urllib.error
+import urllib.parse
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
@@ -263,9 +267,40 @@ def _wire_docs_tagged(df: DataFrame) -> DataFrame:
     )
 
 
+def _http(url: str, auth_header: str | None, timeout_s: float,
+          insecure: bool, body=None, method: str | None = None,
+          form: list | None = None) -> bytes:
+    """One connector request → the raw response bytes.
+
+    Plain-value arguments, so the driver and executor-side fetch
+    closures send identical requests: auth and the TLS policy apply
+    task-side too (the reference's apply_to_request wraps EVERY
+    request, not just the driver's). ``form`` goes out url-encoded
+    (Splunk's job submit), ``body`` as JSON. A GET carries a body only
+    when given; any other verb always carries one — ``{}`` when there
+    is nothing to send, which is how ES takes an unfiltered search."""
+    headers = {}
+    data = None
+    if form is not None:
+        data = urllib.parse.urlencode(form).encode()
+        headers["Content-Type"] = "application/x-www-form-urlencoded"
+    elif body is not None or method not in (None, "GET"):
+        data = json.dumps({} if body is None else body).encode()
+        headers["Content-Type"] = "application/json"
+    if auth_header:
+        headers["Authorization"] = auth_header
+    kwargs = {"timeout": timeout_s}
+    if insecure:
+        kwargs["context"] = _insecure_ssl_context()
+    req = urllib.request.Request(url, data=data, headers=headers, method=method)
+    with urllib.request.urlopen(req, **kwargs) as resp:
+        return resp.read()
+
+
 class ExternalHttpSource(Source):
     """Base for HTTP-service connectors: holds the endpoint, probes a
-    health route on first use, and reports unreachability precisely."""
+    health route on first use, reports unreachability precisely, and
+    turns fetched rows into DataFrames."""
 
     connector_type = "external"
     health_path = "/"
@@ -288,7 +323,7 @@ class ExternalHttpSource(Source):
             60.0 if refresh_interval_s is None else float(refresh_interval_s)
         )
         #: driver-side response bytes (metrics.rs downloaded_bytes
-        #: counter, labeled by connector); executor-side sliced fetches
+        #: counter, labeled by connector); executor-side fetches
         #: aren't counted here — they never cross the driver
         self.bytes_downloaded = 0
         #: driver-side hit documents materialized from search responses
@@ -339,20 +374,10 @@ class ExternalHttpSource(Source):
             except Exception:  # noqa: BLE001 - context may be gone
                 pass
 
-    def _open(self, req):
-        """urlopen with this connector's TLS policy applied."""
-        kwargs = {"timeout": self.timeout_s}
-        if self.accept_invalid_certs:
-            kwargs["context"] = _insecure_ssl_context()
-        return urllib.request.urlopen(req, **kwargs)
-
     def _connect(self) -> None:
-        probe = urllib.request.Request(
-            f"{self.url}{self.health_path}", headers=self.auth.headers()
-        )
         try:
-            with self._open(probe):
-                return
+            _http(f"{self.url}{self.health_path}", self.auth.header,
+                  self.timeout_s, self.accept_invalid_certs)
         except (urllib.error.URLError, OSError, ValueError) as e:
             raise ConnectorUnavailableError(
                 f"{self.connector_type} connector: service at {self.url!r} is "
@@ -360,85 +385,138 @@ class ExternalHttpSource(Source):
                 f"services — use parquet_dir/json_dir/csv_dir/memory"
             ) from None
 
-    def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        self._connect()
-        raise NotImplementedError(  # pragma: no cover - needs a live service
-            f"{self.connector_type} query translation: reachable service "
-            f"found, but the DataFrame bridge is not implemented in this "
-            f"environment (see class docstring for the integration path)"
+    def _request(self, path: str, body=None, method: str | None = None,
+                 form: list | None = None):
+        """Driver-side request (see :func:`_http`) → decoded JSON,
+        counting the response in ``bytes_downloaded``."""
+        raw = _http(f"{self.url}{path}", self.auth.header, self.timeout_s,
+                    self.accept_invalid_certs, body, method, form)
+        self.bytes_downloaded += len(raw)
+        return json.loads(raw)
+
+    def _json_frame(self, spark: SparkSession, items, fetch=None) -> DataFrame:
+        """Rows → DataFrame through ``spark.read.json``, whose schema
+        inference matches how the json_dir source types documents.
+
+        Without ``fetch``, ``items`` are the rows, fetched on the
+        driver. With ``fetch``, each item is one Spark task's share (a
+        scroll slice, an offset range of a finished job) that ``fetch``
+        turns into JSON rows executor-side. That RDD is persisted
+        before read.json — schema inference is its own pass, and an
+        uncached fetch would hit the service again per action (seeing
+        different data, or a Splunk job past its TTL) — and left on
+        this thread's pending list for the run to adopt."""
+        sc = spark.sparkContext
+        if fetch is None:
+            return spark.read.json(sc.parallelize([json.dumps(r) for r in items]))
+        from pyspark import StorageLevel
+
+        rdd = (
+            sc.parallelize(items, len(items))
+            .mapPartitions(fetch)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-
-    def apply_filter(self, expr) -> dict | None:
-        """Connector::apply_filter analog (lib.rs:189): the query-DSL
-        body this connector would absorb for ``expr``, or None when the
-        predicate must stay engine-side. Whole-or-nothing, like the
-        reference; successive pushed filters AND together server-side.
-        """
-        from miso_spark.sources.es_dsl import compile_filter
-
-        return compile_filter(expr)
+        self._pending_persisted.append(rdd)
+        return spark.read.json(rdd)
 
 
-class QuickwitSource(ExternalHttpSource):
-    """Quickwit (quickwit.rs): sub-second search over object storage.
+class EsProtocolSource(ExternalHttpSource):
+    """The Elasticsearch search protocol, shared by the Quickwit and
+    Elasticsearch connectors: Quickwit serves the same search, scroll,
+    count and aggregation requests on its ES-compatible routes
+    (quickwit.rs:655,694,720; elasticsearch.rs:443-630,753,784).
 
-    Reference pushdowns: filter/project/limit/topn/count/summarize/union
-    + raw_query (quickwit.rs:1268,1277,1300,1313,1354,1365,1513,1552) —
-    mirrored by :class:`miso_spark.sources.pushdown.PushHandle`, whose
-    ``apply_*`` guards and request JSON match the reference hook for
-    hook. The wire protocol is Quickwit's ES-compatible surface, the
-    same routes the reference speaks: ``/api/v1/_elastic/{index}/
-    _search`` with scroll paging (quickwit.rs:655), scroll continuation
-    at ``/api/v1/_elastic/_search/scroll`` (:694), counts at
-    ``/api/v1/_elastic/{index}/_count`` (:720).
-    """
+    ``search`` runs a negotiated
+    :class:`~miso_spark.sources.pushdown.PushHandle`: count handles hit
+    ``_count``, aggregation handles run one size-0 ``_search`` and
+    decode the nested buckets, plain searches page through the scroll
+    API honoring the handle's limit. ``slices > 1`` moves the hits
+    fetch onto Spark tasks via sliced scrolls — the engine-side
+    realization of the reference's split-scan model
+    (split_scan_to_union.rs turns one scan into a union of per-split
+    scans; here each slice IS a Spark partition, so the union is the
+    RDD). The reference's connectors only ever return one trivial split
+    (quickwit.rs:1127), so this is the scale path the infrastructure
+    was built for.
 
-    connector_type = "quickwit"
-    health_path = "/api/v1/version"
+    The two services differ only in their wire dialect, held as class
+    data below."""
+
     capabilities = frozenset(
         {CAP_FILTER, CAP_PROJECT, CAP_LIMIT, CAP_TOPN, CAP_COUNT,
-         CAP_SUMMARIZE, CAP_UNION, CAP_RAW}
+         CAP_SUMMARIZE, CAP_UNION}
     )
 
-    #: paging defaults (quickwit.rs default_scroll_timeout/_size)
-    scroll_timeout_ms = 30_000
+    #: route prefix of the search API
+    api_prefix = ""
+    #: verb of _search/_count and scroll requests
+    search_method = "POST"
+    #: scroll keep-alive in whole seconds when it has no fraction
+    #: ("30s"); otherwise always milliseconds ("30000ms")
+    keepalive_in_seconds = True
+    #: narrow ``_source`` with the ``_source_includes`` URL parameter
+    #: rather than a body ``_source`` list
+    includes_in_url = False
+    #: the DELETE that frees a scroll sends ``scroll_id`` as a list
+    delete_id_list = True
+    #: the handle's ``size`` stays in the scroll request body (the URL
+    #: ``size`` parameter carries the page size either way)
+    size_in_body = False
+
+    #: paging defaults (default_scroll_timeout/_size in both references)
+    scroll_timeout_s = 30
     scroll_size = 5_000
-    #: index-discovery refresh cadence (quickwit.rs:330
-    #: default_refresh_interval = 1m; the reference refetches
-    #: /api/v1/indexes on a background task — here lazily on use)
-    indexes_refresh_s = 60.0
 
     def __init__(self, url: str, timeout_s: float = 2.0,
                  timestamp_fields: dict[str, str] | None = None,
                  stats_fields: dict[str, list[str]] | None = None,
                  slices: int = 1,
+                 auth: ConnectorAuth | None = None,
                  refresh_interval_s: float | None = None,
                  scroll_timeout_s: float | None = None,
                  scroll_size: int | None = None):
-        # QuickwitConfig (quickwit.rs:343) has NO auth/TLS knobs —
-        # url + refresh_interval + scroll_timeout + scroll_size only
-        super().__init__(url, timeout_s, refresh_interval_s=refresh_interval_s)
+        super().__init__(url, timeout_s, auth=auth,
+                         refresh_interval_s=refresh_interval_s)
         if scroll_timeout_s is not None:
-            self.scroll_timeout_ms = int(scroll_timeout_s * 1000)
+            # keep sub-second precision: int() turned "500ms" into a
+            # "0s" keep-alive — an immediately-expiring scroll context
+            # and silent data loss on multi-page scrolls (r13→14
+            # ADVICE)
+            self.scroll_timeout_s = scroll_timeout_s
         if scroll_size is not None:
             self.scroll_size = int(scroll_size)
-        self.indexes_refresh_s = self.refresh_interval_s
-        #: index → timestamp field, as the reference learns from
-        #: ``/api/v1/indexes`` doc_mapping (quickwit.rs get_indexes)
+        #: index → timestamp field (Quickwit learns it from
+        #: ``/api/v1/indexes`` doc_mapping, quickwit.rs get_indexes)
         self.timestamp_fields = timestamp_fields or {}
         #: index → fields to profile in fetch_stats (stats.rs parity)
         self.stats_fields = stats_fields or {}
-        #: > 1 distributes the hits fetch across Spark tasks via
-        #: Quickwit's ES-compatible sliced scrolls — same engine-side
-        #: split-scan model as the ES connector below (each slice IS a
-        #: Spark partition; split_scan_to_union.rs's union is the RDD)
         self.slices = max(1, slices)
+
+    @property
+    def _scroll_keepalive(self) -> str:
+        s = self.scroll_timeout_s
+        if self.keepalive_in_seconds and float(s).is_integer():
+            return f"{int(s)}s"
+        return f"{int(s * 1000)}ms"
+
+    def handle(self, collection: str):
+        """Fresh pushdown handle binding the index's timestamp field
+        (get_handle analog, quickwit.rs:1131). The flavors differ in
+        the top-n nulls shape ("missing": _first/_last,
+        elasticsearch.rs:1322) and minimum_should_match in OR filters
+        (quickwit.rs:435)."""
+        from miso_spark.sources.pushdown import PushHandle
+
+        return PushHandle(
+            flavor=self.connector_type,
+            timestamp_field=self.timestamp_fields.get(collection),
+        )
 
     def fetch_stats(self):
         """Connector::fetch_stats (lib.rs:295, stats.rs ConnectorStats):
         one size-0 search per profiled collection carrying a
         ``cardinality`` agg per field — the same metric agg the dcount
-        pushdown emits (quickwit.rs:1414)."""
+        pushdown emits (quickwit.rs:1414, elasticsearch.rs:1382)."""
         from miso_spark.sources.stats import FieldStats
 
         if not self.stats_fields:
@@ -450,8 +528,8 @@ class QuickwitSource(ExternalHttpSource):
                 "size": 0,
                 "aggs": {f: {"cardinality": {"field": f}} for f in fields},
             }
-            payload = self._request_json(
-                f"/api/v1/_elastic/{collection}/_search", body
+            payload = self._request(
+                f"{self.api_prefix}/{collection}/_search", body, self.search_method
             )
             aggs = payload.get("aggregations", {})
             out[collection] = {
@@ -461,22 +539,126 @@ class QuickwitSource(ExternalHttpSource):
             }
         return out
 
-    def apply_filter(self, expr):
-        """Quickwit's OR shape omits minimum_should_match
-        (quickwit.rs:435); otherwise identical to the ES DSL."""
-        from miso_spark.sources.es_dsl import compile_filter
+    def search(self, spark: SparkSession, collection: str, handle=None) -> DataFrame:
+        """Run ``handle`` (default: a full scan of ``collection``)
+        against the live service and return the rows as a DataFrame
+        (quickwit.rs query() :1142)."""
+        from miso_spark.sources.pushdown import decode_aggregations
 
-        return compile_filter(expr, flavor="quickwit")
+        handle = handle if handle is not None else self.handle(collection)
+        self._connect()
+        body = handle.build_search_body()
+        index = f"{self.api_prefix}/{handle.indexes(collection)}"
+
+        if handle.count:
+            n = self._request(f"{index}/_count", body, self.search_method)["count"]
+            if handle.limit is not None:
+                n = min(n, handle.limit)
+            # miso COUNT_FIELD_NAME="Count", like the compiler's count
+            return spark.createDataFrame([(n,)], "Count long")
+
+        if handle.aggs is not None:
+            payload = self._request(f"{index}/_search", body, self.search_method)
+            # a limit absorbed AFTER apply_summarize truncates the
+            # decoded groups, like the reference's query_aggregation
+            # stopping at limit (quickwit.rs:1101-1106)
+            rows = decode_aggregations(payload, handle)[: handle.limit]
+            if not rows:
+                from pyspark.sql.types import StructType
+
+                return spark.createDataFrame([], StructType([]))
+            return _quickwit_agg_timestamps(self._json_frame(spark, rows), handle)
+
+        size = self.scroll_size
+        if handle.limit is not None:
+            size = min(size, handle.limit)
+        params = f"scroll={self._scroll_keepalive}&size={size}"
+        if handle.source_includes:
+            if self.includes_in_url:
+                params = f"_source_includes={','.join(handle.source_includes)}&{params}"
+            else:
+                body = {**(body or {}), "_source": list(handle.source_includes)}
+        if body and not self.size_in_body:
+            body = {k: v for k, v in body.items() if k != "size"}
+        search_path = f"{index}/_search?{params}"
+        scroll_path = f"{self.api_prefix}/_search/scroll"
+        if self.slices > 1 and handle.sorts is None:
+            # distributed fetch: one sliced scroll per Spark task
+            # (sliced scrolls don't preserve a global sort order, so
+            # absorbed top-n keeps the driver path)
+            fetch = _make_slice_fetcher(
+                self.url, search_path, scroll_path, self._scroll_keepalive,
+                body or {}, self.slices, handle.limit, self.timeout_s,
+                self.search_method, self.delete_id_list,
+                self.auth.header, self.accept_invalid_certs,
+            )
+            df = self._json_frame(spark, range(self.slices), fetch)
+            if handle.limit is not None:
+                df = df.limit(handle.limit)
+        else:
+            docs = []
+            for page in _scroll_pages(
+                self._request, search_path, scroll_path, self._scroll_keepalive,
+                body, handle.limit, self.search_method, self.delete_id_list,
+            ):
+                self.docs_fetched += len(page)
+                docs.extend(page)
+            df = self._json_frame(spark, docs[: handle.limit])
+        # transform_log parity (quickwit.rs:838, elasticsearch.rs:848):
+        # the index's timestamp field arrives as an RFC3339 string or a
+        # numeric epoch — surface it typed
+        return _timestamp_typed(_wire_docs_tagged(df), handle.timestamp_field)
+
+    def table(self, spark: SparkSession, collection: str) -> DataFrame:
+        return self.search(spark, collection)
+
+
+class QuickwitSource(EsProtocolSource):
+    """Quickwit (quickwit.rs): sub-second search over object storage,
+    spoken to on its ES-compatible routes like the reference:
+    ``/api/v1/_elastic/{index}/_search`` with scroll paging
+    (quickwit.rs:655), scroll continuation at
+    ``/api/v1/_elastic/_search/scroll`` (:694), counts at
+    ``/api/v1/_elastic/{index}/_count`` (:720).
+
+    Reference pushdowns: filter/project/limit/topn/count/summarize/union
+    + raw_query (quickwit.rs:1268,1277,1300,1313,1354,1365,1513,1552).
+    """
+
+    connector_type = "quickwit"
+    health_path = "/api/v1/version"
+    capabilities = EsProtocolSource.capabilities | {CAP_RAW}
+
+    api_prefix = "/api/v1/_elastic"
+    search_method = "GET"  # the reference sends GET-with-JSON-body
+    keepalive_in_seconds = False
+    includes_in_url = True
+    delete_id_list = False
+    size_in_body = True
+
+    def __init__(self, url: str, timeout_s: float = 2.0,
+                 timestamp_fields: dict[str, str] | None = None,
+                 stats_fields: dict[str, list[str]] | None = None,
+                 slices: int = 1,
+                 refresh_interval_s: float | None = None,
+                 scroll_timeout_s: float | None = None,
+                 scroll_size: int | None = None):
+        # QuickwitConfig (quickwit.rs:343) has NO auth/TLS knobs —
+        # url + refresh_interval + scroll_timeout + scroll_size only
+        super().__init__(url, timeout_s, timestamp_fields, stats_fields, slices,
+                         refresh_interval_s=refresh_interval_s,
+                         scroll_timeout_s=scroll_timeout_s,
+                         scroll_size=scroll_size)
+        #: index-discovery refresh cadence (quickwit.rs:330
+        #: default_refresh_interval = 1m; the reference refetches
+        #: /api/v1/indexes on a background task — here lazily on use)
+        self.indexes_refresh_s = self.refresh_interval_s
 
     def handle(self, collection: str):
-        """Fresh pushdown handle for ``collection`` (get_handle analog:
-        quickwit.rs:1131 binds the index's timestamp field). When the
-        source is in discovery mode (fetch_indexes has run), stale
-        discovery refreshes lazily first — the reference's 1-minute
-        refresh_indexes_at_interval task (quickwit.rs:793), lazy."""
+        """When the source is in discovery mode (fetch_indexes has
+        run), stale discovery refreshes lazily first — the reference's
+        1-minute refresh_indexes_at_interval task (quickwit.rs:793)."""
         import time
-
-        from miso_spark.sources.pushdown import PushHandle
 
         fetched_at = getattr(self, "_indexes_fetched_at", None)
         if (
@@ -487,10 +669,7 @@ class QuickwitSource(ExternalHttpSource):
                 self.fetch_indexes()
             except (urllib.error.URLError, OSError, ValueError):
                 pass  # keep serving the last-known mapping
-        return PushHandle(
-            flavor="quickwit",
-            timestamp_field=self.timestamp_fields.get(collection),
-        )
+        return super().handle(collection)
 
     def fetch_indexes(self) -> dict[str, str | None]:
         """GET /api/v1/indexes → {index_id: timestamp_field} from each
@@ -500,7 +679,7 @@ class QuickwitSource(ExternalHttpSource):
         ``@time`` (quickwit.rs:1113-1125 get_collection)."""
         import time
 
-        payload = self._request_json("/api/v1/indexes", None)
+        payload = self._request("/api/v1/indexes")
         self._indexes_fetched_at = time.monotonic()
         self.timestamp_fields = {
             e["index_config"]["index_id"]: e["index_config"]
@@ -517,472 +696,102 @@ class QuickwitSource(ExternalHttpSource):
         }
         return self.timestamp_fields
 
-    def _request_json(self, path: str, body: dict | None, method: str = "GET"):
-        import json
 
-        data = json.dumps(body).encode() if body is not None else None
-        headers = {"Content-Type": "application/json"} if data else {}
-        headers.update(self.auth.headers())
-        req = urllib.request.Request(
-            f"{self.url}{path}",
-            data=data,
-            headers=headers,
-            method=method,  # the reference sends GET-with-JSON-body
-        )
-        with self._open(req) as resp:
-            raw = resp.read()
-        self.bytes_downloaded += len(raw)
-        return json.loads(raw)
-
-    def search(self, spark: SparkSession, collection: str, handle=None) -> DataFrame:
-        """Execute a pushed-down query against the live service and
-        return the rows as a DataFrame (quickwit.rs query(), :1142).
-
-        Count handles hit ``_count``; aggregation handles run one
-        ``_search`` with size=0 and decode the nested buckets; plain
-        searches page through the scroll API honoring the handle's
-        limit. Driver-side fetch — the bootstrap/test path, like the
-        ES bridge below; bulk ingest at scale goes through parquet or
-        a distributed DataSource."""
-        import json
-
-        from miso_spark.sources.pushdown import decode_aggregations
-
-        handle = handle if handle is not None else self.handle(collection)
-        self._connect()
-        body = handle.build_search_body()
-        indexes = handle.indexes(collection)
-
-        if handle.count:
-            payload = self._request_json(f"/api/v1/_elastic/{indexes}/_count", body)
-            n = payload["count"]
-            if handle.limit is not None:
-                n = min(n, handle.limit)
-            # miso COUNT_FIELD_NAME="Count", like the compiler's count
-            return spark.createDataFrame([(n,)], "Count long")
-
-        if handle.aggs is not None:
-            payload = self._request_json(f"/api/v1/_elastic/{indexes}/_search", body)
-            rows = decode_aggregations(payload, handle)
-            if handle.limit is not None:
-                # a limit absorbed AFTER apply_summarize truncates the
-                # decoded groups, like the reference's query_aggregation
-                # stopping at limit (quickwit.rs:1101-1106)
-                rows = rows[: handle.limit]
-            if not rows:
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame([], StructType([]))
-            rdd = spark.sparkContext.parallelize([json.dumps(r) for r in rows])
-            df = spark.read.json(rdd)
-            return _quickwit_agg_timestamps(df, handle)
-
-        scroll_size = self.scroll_size
-        if handle.limit is not None:
-            scroll_size = min(scroll_size, handle.limit)
-        include = (
-            f"_source_includes={','.join(handle.source_includes)}&"
-            if handle.source_includes
-            else ""
-        )
-        path = (
-            f"/api/v1/_elastic/{indexes}/_search?{include}"
-            f"scroll={self.scroll_timeout_ms}ms&size={scroll_size}"
-        )
-        if self.slices > 1 and handle.sorts is None:
-            # distributed fetch: one sliced scroll per Spark task over
-            # the same ES-compatible surface (sliced scrolls don't
-            # preserve a global sort order, so absorbed top-n keeps the
-            # driver path — identical rule to the ES connector)
-            fetch = _make_slice_fetcher(
-                self.url, path, "/api/v1/_elastic/_search/scroll",
-                f"{self.scroll_timeout_ms}ms", body or {}, self.slices,
-                handle.limit, self.timeout_s,
-                method="GET",  # the reference sends GET-with-JSON-body
-                delete_as_list=False,  # DELETE body is the bare id here
-                auth_header=self.auth.header,
-                insecure=self.accept_invalid_certs,
-            )
-            from pyspark import StorageLevel
-
-            # persist before read.json: schema inference is its own
-            # pass, and an uncached fetch would re-hit the service per
-            # action (and could observe different data between passes)
-            rdd = (
-                spark.sparkContext.parallelize(range(self.slices), self.slices)
-                .mapPartitions(fetch)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            self._pending_persisted.append(rdd)
-            df = _wire_docs_tagged(spark.read.json(rdd))
-            if handle.limit is not None:
-                df = df.limit(handle.limit)
-            df = _timestamp_typed(df, handle.timestamp_field)
-            return df
-        payload = self._request_json(path, body)
-        docs = [h["_source"] for h in payload["hits"]["hits"]]
-        self.docs_fetched += len(docs)
-        scroll_id = payload.get("_scroll_id")
-        while docs and scroll_id and (handle.limit is None or len(docs) < handle.limit):
-            payload = self._request_json(
-                "/api/v1/_elastic/_search/scroll",
-                {"scroll_id": scroll_id, "scroll": f"{self.scroll_timeout_ms}ms"},
-            )
-            page = [h["_source"] for h in payload["hits"]["hits"]]
-            self.docs_fetched += len(page)
-            if not page:
-                break
-            docs.extend(page)
-            scroll_id = payload.get("_scroll_id", scroll_id)
-        if scroll_id:
-            # free the server-side scroll context — mandatory hygiene
-            # when a limit truncates mid-scroll (the context would
-            # otherwise pin index segments until its timeout)
-            try:
-                self._request_json(
-                    "/api/v1/_elastic/_search/scroll",
-                    {"scroll_id": scroll_id},
-                    method="DELETE",
-                )
-            except (urllib.error.URLError, OSError, ValueError):
-                pass  # best-effort; the timeout reclaims it anyway
-        if handle.limit is not None:
-            docs = docs[: handle.limit]
-        rdd = spark.sparkContext.parallelize([json.dumps(d) for d in docs])
-        df = _wire_docs_tagged(spark.read.json(rdd))
-        # transform_log parity (quickwit.rs:838): the index's timestamp
-        # field arrives as an RFC3339 string — surface it typed
-        df = _timestamp_typed(df, handle.timestamp_field)
-        return df
-
-    def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return self.search(spark, collection)
-
-
-class ElasticsearchSource(ExternalHttpSource):
-    """Elasticsearch (elasticsearch.rs).
+class ElasticsearchSource(EsProtocolSource):
+    """Elasticsearch (elasticsearch.rs) on its own REST routes:
+    ``/{index}/_search``, ``/{index}/_count``, ``/_search/scroll``.
 
     Reference pushdowns: filter/project/limit/topn/count/summarize/union
-    (elasticsearch.rs:1264-1487; no raw_query).
-    Spark path: the official ``org.elasticsearch.spark.sql`` DataSource
-    (``es.query`` carries pushed filters; column pruning via
-    ``es.read.field.include``).
-
-    ``slices > 1`` distributes the hits fetch across Spark tasks via
-    ES sliced scrolls — the engine-side realization of the reference's
-    split-scan model (split_scan_to_union.rs turns one scan into a
-    union of per-split scans; here each slice IS a Spark partition, so
-    the union is the RDD). The reference's connectors only ever return
-    one trivial split (quickwit.rs:1127), so this is the scale path
-    the infrastructure was built for.
+    (elasticsearch.rs:1264-1487; no raw_query). ElasticsearchConfig
+    (elasticsearch.rs:102): url + auth + refresh_interval +
+    scroll_timeout + scroll_size.
     """
 
     connector_type = "elasticsearch"
     health_path = "/_cluster/health"
-    capabilities = frozenset(
-        {CAP_FILTER, CAP_PROJECT, CAP_LIMIT, CAP_TOPN, CAP_COUNT,
-         CAP_SUMMARIZE, CAP_UNION}
-    )
 
-    #: paging defaults (elasticsearch.rs default_scroll_timeout/_size)
-    scroll_timeout_s = 30
-    scroll_size = 5_000
 
-    def __init__(self, url: str, timeout_s: float = 2.0,
-                 timestamp_fields: dict[str, str] | None = None,
-                 stats_fields: dict[str, list[str]] | None = None,
-                 slices: int = 1,
-                 auth: ConnectorAuth | None = None,
-                 refresh_interval_s: float | None = None,
-                 scroll_timeout_s: float | None = None,
-                 scroll_size: int | None = None):
-        # ElasticsearchConfig (elasticsearch.rs:102): url + auth +
-        # refresh_interval + scroll_timeout + scroll_size
-        super().__init__(url, timeout_s, auth=auth,
-                         refresh_interval_s=refresh_interval_s)
-        if scroll_timeout_s is not None:
-            # keep sub-second precision: int() turned "500ms" into a
-            # "0s" keep-alive — an immediately-expiring scroll context
-            # and silent data loss on multi-page scrolls (r13→14
-            # ADVICE). Whole seconds still render "Ns" on the wire.
-            self.scroll_timeout_s = scroll_timeout_s
-        if scroll_size is not None:
-            self.scroll_size = int(scroll_size)
-        self.timestamp_fields = timestamp_fields or {}
-        self.stats_fields = stats_fields or {}
-        self.slices = max(1, slices)
-
-    @property
-    def _scroll_keepalive(self) -> str:
-        s = self.scroll_timeout_s
-        return f"{int(s)}s" if float(s).is_integer() else f"{int(s * 1000)}ms"
-
-    def fetch_stats(self):
-        """Per-field distinct counts via ES ``cardinality`` aggs
-        (lib.rs:295 fetch_stats, elasticsearch.rs:1382 cardinality)."""
-        from miso_spark.sources.stats import FieldStats
-
-        if not self.stats_fields:
-            return None
-        self._connect()
-        out: dict[str, dict[str, FieldStats]] = {}
-        for collection, fields in self.stats_fields.items():
-            body = {
-                "size": 0,
-                "aggs": {f: {"cardinality": {"field": f}} for f in fields},
-            }
-            payload = self._post_json(f"/{collection}/_search", body)
-            aggs = payload.get("aggregations", {})
-            out[collection] = {
-                f: FieldStats(distinct_count=int(aggs[f]["value"]))
-                for f in fields
-                if isinstance(aggs.get(f), dict) and aggs[f].get("value") is not None
-            }
-        return out
-
-    def handle(self, collection: str):
-        """Fresh pushdown handle — the ES flavor differs from Quickwit
-        only in the top-n nulls shape ("missing": _first/_last,
-        elasticsearch.rs:1322) and minimum_should_match in OR filters."""
-        from miso_spark.sources.pushdown import PushHandle
-
-        return PushHandle(
-            flavor="elasticsearch",
-            timestamp_field=self.timestamp_fields.get(collection),
-        )
-
-    def _post_json(self, path: str, body: dict, method: str = "POST") -> dict:
-        import json
-
-        req = urllib.request.Request(
-            f"{self.url}{path}",
-            data=json.dumps(body).encode(),
-            headers={"Content-Type": "application/json", **self.auth.headers()},
-            method=method,
-        )
-        with self._open(req) as resp:
-            raw = resp.read()
-        self.bytes_downloaded += len(raw)
-        return json.loads(raw)
-
-    def search(
-        self,
-        spark: SparkSession,
-        collection: str,
-        query=None,
-        size: int = 1000,
-    ) -> DataFrame:
-        """POST ``/{index}/_search`` with a compiled es_dsl query and
-        return the hits' ``_source`` docs as a DataFrame.
-
-        ``query`` is either a raw DSL dict (the original bridge, as in
-        elasticsearch.rs:443-630) or a negotiated
-        :class:`~miso_spark.sources.pushdown.PushHandle`, in which case
-        the handle's full request body goes out — counts route to
-        ``/{index}/_count`` and aggregations decode from the nested
-        buckets, like the Quickwit bridge. Driver-side single-page
-        fetch — the bootstrap/test path; a production deployment scans
-        distributed through the official
-        ``org.elasticsearch.spark.sql`` DataSource with the same DSL in
-        ``es.query``."""
-        import json
-
-        from miso_spark.sources.pushdown import PushHandle, decode_aggregations
-
-        self._connect()
-        if isinstance(query, PushHandle):
-            handle = query
-            body = handle.build_search_body() or {}
-            indexes = handle.indexes(collection)
-            if handle.count:
-                payload = self._post_json(f"/{indexes}/_count", body)
-                n = payload["count"]
-                if handle.limit is not None:
-                    n = min(n, handle.limit)
-                return spark.createDataFrame([(n,)], "Count long")
-            if handle.aggs is not None:
-                payload = self._post_json(f"/{indexes}/_search", body)
-                rows = decode_aggregations(payload, handle)
-                if handle.limit is not None:
-                    # same truncation as the Quickwit path above
-                    rows = rows[: handle.limit]
-                if not rows:
-                    from pyspark.sql.types import StructType
-
-                    return spark.createDataFrame([], StructType([]))
-                rdd = spark.sparkContext.parallelize([json.dumps(r) for r in rows])
-                # group-by / min-max timestamp conversion, as the ES
-                # reference applies (elasticsearch.rs:882,893) — same
-                # epoch conventions as Quickwit's ES-compatible surface
-                return _quickwit_agg_timestamps(spark.read.json(rdd), handle)
-            # scrolled fetch like the reference (elasticsearch.rs:753
-            # begin_search + :784 continue_scroll)
-            if handle.source_includes:
-                body["_source"] = list(handle.source_includes)
-            scroll_size = self.scroll_size
-            if handle.limit is not None:
-                scroll_size = min(scroll_size, handle.limit)
-            body.pop("size", None)
-            if self.slices > 1 and handle.sorts is None:
-                # distributed fetch: one sliced scroll per Spark task
-                # (sliced scrolls don't preserve a global sort order,
-                # so absorbed top-n keeps the driver path)
-                fetch = _make_slice_fetcher(
-                    self.url,
-                    f"/{indexes}/_search?scroll={self._scroll_keepalive}"
-                    f"&size={scroll_size}",
-                    "/_search/scroll",
-                    self._scroll_keepalive,
-                    body, self.slices, handle.limit, self.timeout_s,
-                    auth_header=self.auth.header,
-                    insecure=self.accept_invalid_certs,
-                )
-                from pyspark import StorageLevel
-
-                # persist before read.json: schema inference is its own
-                # pass over the RDD, and an uncached fetch would hit
-                # the service once per action (and could see different
-                # data between passes)
-                rdd = (
-                    spark.sparkContext.parallelize(range(self.slices), self.slices)
-                    .mapPartitions(fetch)
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                self._pending_persisted.append(rdd)
-                df = _wire_docs_tagged(spark.read.json(rdd))
-                if handle.limit is not None:
-                    df = df.limit(handle.limit)
-                df = _timestamp_typed(df, handle.timestamp_field)
-                return df
-            payload = self._post_json(
-                f"/{indexes}/_search?scroll={self._scroll_keepalive}&size={scroll_size}",
-                body,
-            )
-            docs = [h["_source"] for h in payload.get("hits", {}).get("hits", [])]
-            self.docs_fetched += len(docs)
-            scroll_id = payload.get("_scroll_id")
-            while docs and scroll_id and (handle.limit is None or len(docs) < handle.limit):
-                payload = self._post_json(
-                    "/_search/scroll",
-                    {"scroll": self._scroll_keepalive, "scroll_id": scroll_id},
-                )
-                page = [h["_source"] for h in payload.get("hits", {}).get("hits", [])]
-                self.docs_fetched += len(page)
-                if not page:
-                    break
-                docs.extend(page)
-                scroll_id = payload.get("_scroll_id", scroll_id)
-            if scroll_id:
-                # DELETE /_search/scroll: free the scroll context when
-                # paging stops (a limit can truncate mid-scroll)
-                try:
-                    self._post_json(
-                        "/_search/scroll",
-                        {"scroll_id": [scroll_id]},
-                        method="DELETE",
-                    )
-                except (urllib.error.URLError, OSError, ValueError):
-                    pass  # best-effort; the timeout reclaims it anyway
-            if handle.limit is not None:
-                docs = docs[: handle.limit]
-            rdd = spark.sparkContext.parallelize([json.dumps(d) for d in docs])
-            df = _wire_docs_tagged(spark.read.json(rdd))
-            # transform_log parity (elasticsearch.rs:848): the index's
-            # timestamp field arrives as a string — surface it typed,
-            # like the Quickwit search() above
-            df = _timestamp_typed(df, handle.timestamp_field)
-            return df
-        else:
-            body = {"query": query or {"match_all": {}}, "size": size}
-            payload = self._post_json(f"/{collection}/_search", body)
-        docs = [h["_source"] for h in payload.get("hits", {}).get("hits", [])]
-        self.docs_fetched += len(docs)
-        # json-lines through spark.read.json: schema inference matches
-        # how the json_dir source types documents
-        rdd = spark.sparkContext.parallelize([json.dumps(d) for d in docs])
-        return _wire_docs_tagged(spark.read.json(rdd))
-
-    def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return self.search(spark, collection)
+def _scroll_pages(request, search_path: str, scroll_path: str, keepalive: str,
+                  body, limit: int | None, method: str, delete_id_list: bool):
+    """Page one ES-protocol scroll and yield each page's ``_source``
+    docs: open it with ``body`` at ``search_path``, continue at
+    ``scroll_path`` (elasticsearch.rs:753 begin_search + :784
+    continue_scroll) until an empty page, no scroll id, or ``limit``
+    docs — the last page may overshoot, callers trim — then free the
+    scroll context. Freeing is mandatory hygiene when a limit stops
+    paging mid-scroll: the context would pin index segments until its
+    timeout. ``request(path, body, method)`` returns the decoded
+    payload; the driver and the sliced fetch both page through here."""
+    payload = request(search_path, body, method)
+    scroll_id = payload.get("_scroll_id")
+    seen = 0
+    while True:
+        page = [h["_source"] for h in payload.get("hits", {}).get("hits", [])]
+        if not page:
+            break
+        yield page
+        seen += len(page)
+        if not scroll_id or (limit is not None and seen >= limit):
+            break
+        payload = request(scroll_path, {"scroll": keepalive, "scroll_id": scroll_id},
+                          method)
+        scroll_id = payload.get("_scroll_id", scroll_id)
+    if scroll_id:
+        try:
+            request(scroll_path,
+                    {"scroll_id": [scroll_id] if delete_id_list else scroll_id},
+                    "DELETE")
+        except (urllib.error.URLError, OSError, ValueError):
+            pass  # best-effort; the timeout reclaims it anyway
 
 
 def _make_slice_fetcher(url: str, search_path: str, scroll_path: str,
                         scroll_token: str, body: dict, n_slices: int,
                         limit: int | None, timeout_s: float,
-                        method: str = "POST", delete_as_list: bool = True,
+                        method: str = "POST", delete_id_list: bool = True,
                         auth_header: str | None = None,
                         insecure: bool = False):
     """Executor-side sliced-scroll fetcher (closure over plain values —
     no source object crosses the pickle boundary). Each Spark task
-    opens its own scroll with ``slice: {id, max}``, pages it dry (or to
-    the per-slice limit bound), frees the scroll context, and yields
-    JSON document strings.
-
-    Shared by the ES and Quickwit connectors — Quickwit speaks the same
-    ES-compatible scroll surface (quickwit.rs:655,694), differing only
-    in path prefix (``search_path``/``scroll_path``), scroll-keepalive
-    token shape (``30s`` vs ``30000ms``), HTTP verb for search
-    (GET-with-body), and the DELETE body (bare id vs list)."""
+    pages its own scroll with ``slice: {id, max}`` through
+    :func:`_scroll_pages` and yields JSON document strings, at most
+    ``limit`` per slice — an upper bound of the global limit, which
+    the engine's ``df.limit()`` cuts exactly."""
 
     def fetch(slice_ids):
-        import json as _json
-        import urllib.request as _rq
-
-        # auth + TLS policy apply task-side too (the reference's
-        # apply_to_request wraps EVERY request, not just the driver's)
-        headers = {"Content-Type": "application/json"}
-        if auth_header:
-            headers["Authorization"] = auth_header
-        kwargs = {"timeout": timeout_s}
-        if insecure:
-            kwargs["context"] = _insecure_ssl_context()
-
-        def post(path: str, payload: dict, verb: str = "POST") -> dict:
-            req = _rq.Request(
-                f"{url}{path}",
-                data=_json.dumps(payload).encode(),
-                headers=headers,
-                method=verb,
-            )
-            with _rq.urlopen(req, **kwargs) as resp:
-                return _json.load(resp)
+        def request(path, payload, verb):
+            return json.loads(_http(f"{url}{path}", auth_header, timeout_s,
+                                    insecure, payload, verb))
 
         for sid in slice_ids:
-            b = dict(body)
-            b["slice"] = {"id": sid, "max": n_slices}
-            payload = post(search_path, b, method)
-            scroll_id = payload.get("_scroll_id")
-            yielded = 0
-            while True:
-                page = [h["_source"] for h in payload.get("hits", {}).get("hits", [])]
-                if not page:
-                    break
-                for d in page:
-                    yield _json.dumps(d)
-                    yielded += 1
-                    # `limit` rows per slice upper-bounds the global
-                    # limit; the engine's df.limit() does the exact cut
-                    if limit is not None and yielded >= limit:
-                        break
-                if (limit is not None and yielded >= limit) or not scroll_id:
-                    break
-                payload = post(
-                    scroll_path,
-                    {"scroll": scroll_token, "scroll_id": scroll_id},
-                    method,
-                )
-                scroll_id = payload.get("_scroll_id", scroll_id)
-            if scroll_id:
-                try:
-                    post(
-                        scroll_path,
-                        {"scroll_id": [scroll_id] if delete_as_list else scroll_id},
-                        "DELETE",
-                    )
-                except Exception:  # noqa: BLE001 - best-effort hygiene
-                    pass
+            sliced = dict(body, slice={"id": sid, "max": n_slices})
+            n = 0
+            for page in _scroll_pages(request, search_path, scroll_path,
+                                      scroll_token, sliced, limit, method,
+                                      delete_id_list):
+                for d in page if limit is None else page[: limit - n]:
+                    yield json.dumps(d)
+                n += len(page)
 
     return fetch
+
+
+def _offset_pages(request, sid: str, route: str, batch_size: int,
+                  start: int = 0, end: int | None = None):
+    """Page GET /services/search/jobs/{sid}/{route} with offset/count
+    (query_runner.rs:375) from ``start`` until an empty page or
+    ``end``, yielding each page's raw result rows."""
+    offset = start
+    while end is None or offset < end:
+        count = batch_size if end is None else min(batch_size, end - offset)
+        page = request(
+            f"/services/search/jobs/{sid}/{route}?output_mode=json"
+            f"&offset={offset}&count={count}"
+        ).get("results", [])
+        if not page:
+            return  # done, or resultCount overshot reality — stop clean
+        yield page
+        offset += len(page)
 
 
 def _make_offset_fetcher(url: str, sid: str, auth_header: str | None,
@@ -991,34 +800,17 @@ def _make_offset_fetcher(url: str, sid: str, auth_header: str | None,
     """Executor-side Splunk results fetcher (closure over plain values
     — nothing unpicklable crosses to the task). Each partition holds
     one ``(start, end)`` offset range of the finished job's results and
-    pages it with the same ``offset``/``count`` GETs as the driver loop
-    (query_runner.rs:375), yielding JSON row strings."""
+    pages it through :func:`_offset_pages` like the driver loop,
+    yielding JSON row strings."""
 
     def fetch(ranges):
-        import json as _json
-        import urllib.request as _rq
+        def request(path):
+            return json.loads(_http(f"{url}{path}", auth_header, timeout_s, insecure))
 
-        headers = {"Authorization": auth_header} if auth_header else {}
-        kwargs = {"timeout": timeout_s}
-        if insecure:
-            kwargs["context"] = _insecure_ssl_context()
         for start, end in ranges:
-            offset = start
-            while offset < end:
-                count = min(batch_size, end - offset)
-                req = _rq.Request(
-                    f"{url}/services/search/jobs/{sid}/results?output_mode=json"
-                    f"&offset={offset}&count={count}",
-                    headers=headers,
-                )
-                with _rq.urlopen(req, **kwargs) as resp:
-                    payload = _json.load(resp)
-                page = payload.get("results", [])
-                if not page:
-                    break  # resultCount overshot reality — stop clean
+            for page in _offset_pages(request, sid, "results", batch_size, start, end):
                 for d in page:
-                    yield _json.dumps(transform_splunk_row(d))
-                offset += len(page)
+                    yield json.dumps(transform_splunk_row(d))
 
     return fetch
 
@@ -1033,8 +825,6 @@ def transform_splunk_row(row: dict) -> dict:
     event JSON with proper types — parse it and merge the typed values
     over the stringly ones, then drop the per-result internals. ``_raw``
     and ``_time`` stay, like the reference."""
-    import json
-
     raw = row.get("_raw")
     if isinstance(raw, str):
         try:
@@ -1051,8 +841,9 @@ class SplunkSource(ExternalHttpSource):
 
     Reference pushdowns: filter/project/extend/limit/topn/count/
     summarize/union (splunk/mod.rs:1182-1380; extend at :1343).
-    Spark path: the REST ``/services/search/jobs/export`` endpoint in
-    JSON mode (pushed steps rendered into SPL) → ``spark.read.json``.
+    Pushed steps render into SPL (``SplunkHandle``, sources/spl.py)
+    and run through the search-job REST protocol — submit, poll, page
+    ``/results`` — into ``spark.read.json``.
     """
 
     connector_type = "splunk"
@@ -1163,88 +954,59 @@ class SplunkSource(ExternalHttpSource):
             out[collection] = stats
         return out
 
-    def apply_filter(self, expr):
-        """Splunk speaks SPL, not the ES query DSL: `| search` terms
-        for indexed predicates, `| where` for evaluation clauses
-        (splunk/mod.rs:647 compile_filter_to_spl)."""
-        from miso_spark.sources.spl import compile_filter_spl
-
-        return compile_filter_spl(expr)
-
     # ---- job protocol (splunk/query_runner.rs) -----------------------
-
-    def _request(self, path: str, data: bytes | None = None,
-                 content_type: str | None = None) -> dict:
-        import json
-
-        headers = {}
-        if content_type:
-            headers["Content-Type"] = content_type
-        headers.update(self.auth.headers())
-        req = urllib.request.Request(f"{self.url}{path}", data=data, headers=headers)
-        with self._open(req) as resp:
-            raw = resp.read()
-        self.bytes_downloaded += len(raw)
-        return json.loads(raw)
 
     def create_job(self, spl: str, previews: bool = False) -> str:
         """POST /services/search/jobs with the form body the reference
         sends (query_runner.rs:152: search + output_mode=json +
         exec_mode=normal; previews add status_buckets so Splunk keeps
         preview results) → the job's sid."""
-        import urllib.parse
-
         form = [("search", spl), ("output_mode", "json"), ("exec_mode", "normal")]
         if previews:
             # value doesn't matter as long as > 0 (query_runner.rs:160)
             form.append(("status_buckets", "300"))
-        payload = self._request(
-            "/services/search/jobs",
-            urllib.parse.urlencode(form).encode(),
-            "application/x-www-form-urlencoded",
-        )
-        return payload["sid"]
+        return self._request("/services/search/jobs", form=form)["sid"]
 
-    def poll_until_done(self, sid: str) -> int:
-        """GET /services/search/jobs/{sid} until isDone, with the
-        reference's terminal-state handling (query_runner.rs:201:
-        FAILED/PAUSED error out; anything else keeps polling until the
-        timeout). Returns resultCount."""
+    def _job_polls(self, sid: str):
+        """Poll GET /services/search/jobs/{sid} and yield each status
+        ``content`` (``{}`` while Splunk reports no entry), with the
+        reference's terminal-state handling (query_runner.rs:201):
+        FAILED/PAUSED raise, and so does the job timeout. The caller
+        stops on the state it waits for and sleeps between polls."""
         import time
 
         deadline = time.monotonic() + self.job_timeout_s
         while True:
             if time.monotonic() > deadline:
                 raise TimeoutError(f"Search job {sid} timed out")
-            payload = self._request(f"/services/search/jobs/{sid}?output_mode=json")
-            entries = payload.get("entry", [])
-            if entries:
-                content = entries[0]["content"]
-                if content.get("isDone"):
-                    return int(content.get("resultCount", 0))
-                state = content.get("dispatchState", "")
-                if state == "FAILED":
-                    raise RuntimeError(f"Search job {sid} failed")
-                if state in ("PAUSE", "PAUSED"):
-                    raise RuntimeError(f"Search job {sid} paused unexpectedly")
+            entries = self._request(
+                f"/services/search/jobs/{sid}?output_mode=json"
+            ).get("entry", [])
+            content = entries[0]["content"] if entries else {}
+            state = content.get("dispatchState", "")
+            if state == "FAILED":
+                raise RuntimeError(f"Search job {sid} failed")
+            if state in ("PAUSE", "PAUSED"):
+                raise RuntimeError(f"Search job {sid} paused unexpectedly")
+            yield content
+
+    def poll_until_done(self, sid: str) -> int:
+        """Poll the job until isDone; returns resultCount."""
+        import time
+
+        for content in self._job_polls(sid):
+            if content.get("isDone"):
+                return int(content.get("resultCount", 0))
             time.sleep(self.poll_interval_s)
 
     def fetch_results(self, sid: str, route: str = "results") -> list[dict]:
-        """Page GET /services/search/jobs/{sid}/{results|results_preview}
-        with offset/count until an empty page (query_runner.rs:375)."""
+        """All rows of GET /services/search/jobs/{sid}/{results|
+        results_preview}, paged with offset/count (query_runner.rs:375)."""
         docs: list[dict] = []
-        offset = 0
-        while True:
-            payload = self._request(
-                f"/services/search/jobs/{sid}/{route}?output_mode=json"
-                f"&offset={offset}&count={self.batch_size}"
-            )
-            page = payload.get("results", [])
-            if not page:
-                return docs
+        for page in _offset_pages(self._request, sid, route, self.batch_size):
             self.docs_fetched += len(page)
             docs.extend(transform_splunk_row(r) for r in page)
-            offset += len(page)
+        return docs
 
     def run_job_with_previews(
         self, spl: str, preview_interval_s: float | None = None
@@ -1265,33 +1027,20 @@ class SplunkSource(ExternalHttpSource):
             preview_interval_s = self.preview_interval_s
         self._connect()
         sid = self.create_job(spl, previews=True)
-        deadline = time.monotonic() + self.job_timeout_s
         round_id = 0
-        while True:
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"Search job {sid} timed out")
-            payload = self._request(f"/services/search/jobs/{sid}?output_mode=json")
-            entries = payload.get("entry", [])
-            if not entries:
-                time.sleep(self.poll_interval_s)
-                continue
-            content = entries[0]["content"]
+        for content in self._job_polls(sid):
             state = content.get("dispatchState", "")
-            if state == "FAILED":
-                raise RuntimeError(f"Search job {sid} failed")
-            if state in ("PAUSE", "PAUSED"):
-                raise RuntimeError(f"Search job {sid} paused unexpectedly")
             if state == "RUNNING":
                 rows = self.fetch_results(sid, "results_preview")
                 if rows:
                     yield ("partial", round_id, rows)
                     round_id += 1
                 time.sleep(preview_interval_s)
-                continue
-            if state == "DONE" or content.get("isDone"):
+            elif state == "DONE" or content.get("isDone"):
                 yield ("final", round_id, self.fetch_results(sid))
                 return
-            time.sleep(self.poll_interval_s)
+            else:
+                time.sleep(self.poll_interval_s)
 
     def run_job(self, spark: SparkSession, spl: str) -> DataFrame:
         """Full job lifecycle — submit, poll, fetch — returning the
@@ -1302,36 +1051,20 @@ class SplunkSource(ExternalHttpSource):
         into ``slices`` contiguous offset ranges, one Spark partition
         each, every task paging its range with the same offset/count
         requests the driver loop would send."""
-        import json
-
         self._connect()
         sid = self.create_job(spl)
         n = self.poll_until_done(sid)
         if self.slices > 1 and n > self.batch_size:
             per = -(-n // self.slices)  # ceil division
-            ranges = [
-                (start, min(start + per, n))
-                for start in range(0, n, per)
-            ]
+            ranges = [(start, min(start + per, n)) for start in range(0, n, per)]
             fetch = _make_offset_fetcher(
                 self.url, sid, self.auth.header, self.batch_size,
                 self.timeout_s, insecure=self.accept_invalid_certs,
             )
-            from pyspark import StorageLevel
-
-            # persist before read.json — same rationale as the sliced
-            # scrolls above: schema inference is its own pass and the
-            # job's results expire with the job's TTL
-            rdd = (
-                spark.sparkContext.parallelize(ranges, len(ranges))
-                .mapPartitions(fetch)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            self._pending_persisted.append(rdd)
-            return _wire_docs_tagged(spark.read.json(rdd))
-        docs = self.fetch_results(sid)
-        rdd = spark.sparkContext.parallelize([json.dumps(d) for d in docs])
-        return _wire_docs_tagged(spark.read.json(rdd))
+            df = self._json_frame(spark, ranges, fetch)
+        else:
+            df = self._json_frame(spark, self.fetch_results(sid))
+        return _wire_docs_tagged(df)
 
     def handle(self, collection: str):
         """Fresh SPL pipeline handle (splunk/mod.rs get_handle)."""

@@ -405,7 +405,12 @@ class SearchCore:
 
 
 class _StubServer:
-    def __init__(self, handler_cls):
+    def __init__(self, route):
+        #: every request received, in arrival order, as (method, path
+        #: with its query string, body: decoded JSON, else the raw
+        #: text, None when empty)
+        self.requests: list[tuple[str, str, object]] = []
+        handler_cls = _make_handler(route, self.requests)
         self.httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler_cls)
         self.url = f"http://127.0.0.1:{self.httpd.server_address[1]}"
         self.thread = threading.Thread(target=self.httpd.serve_forever, daemon=True)
@@ -416,7 +421,7 @@ class _StubServer:
         self.httpd.server_close()
 
 
-def _make_handler(route):
+def _make_handler(route, requests: list):
     class Handler(http.server.BaseHTTPRequestHandler):
         def log_message(self, *a):  # quiet
             pass
@@ -424,6 +429,11 @@ def _make_handler(route):
         def _handle(self):
             length = int(self.headers.get("Content-Length") or 0)
             raw = self.rfile.read(length) if length else b""
+            try:
+                body = json.loads(raw) if raw else None
+            except ValueError:
+                body = raw.decode()
+            requests.append((self.command, self.path, body))
             try:
                 payload = route(self.command, self.path, raw)
             except Exception as e:  # surface stub bugs as 500s
@@ -461,7 +471,7 @@ class QuickwitStub(_StubServer):
                  ts_fields: dict[str, str] | None = None):
         self.core = SearchCore(indexes, "quickwit", ts_fields)
         self.ts_fields = ts_fields or {}
-        super().__init__(_make_handler(self._route))
+        super().__init__(self._route)
 
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)
@@ -499,7 +509,7 @@ class ElasticStub(_StubServer):
     def __init__(self, indexes: dict[str, list[dict]],
                  ts_fields: dict[str, str] | None = None):
         self.core = SearchCore(indexes, "elasticsearch", ts_fields)
-        super().__init__(_make_handler(self._route))
+        super().__init__(self._route)
 
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)
@@ -929,7 +939,7 @@ class SplunkStub(_StubServer):
         self.polls: dict[str, int] = {}
         self.spls: list[str] = []
         self._ids = itertools.count(1)
-        super().__init__(_make_handler(self._route))
+        super().__init__(self._route)
 
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)

@@ -97,17 +97,17 @@ def test_unpushable_returns_none_whole_or_nothing():
 
 
 def test_apply_filter_on_external_sources():
-    from miso_spark.sources.external import ElasticsearchSource, QuickwitSource
-
     expr = parse_kql("c.t | where level == 'error'").steps[1].expr
-    for src in (ElasticsearchSource("http://x:1"), QuickwitSource("http://x:1")):
-        assert src.apply_filter(expr) == {"term": {"level": {"value": "error"}}}
+    for flavor in ("elasticsearch", "quickwit"):
+        assert compile_filter(expr, flavor=flavor) == {
+            "term": {"level": {"value": "error"}}
+        }
 
     # OR-shape divergence: ES sets minimum_should_match (es.rs:454),
     # quickwit omits it (quickwit.rs:435)
     disj = parse_kql("c.t | where a == 1 or b == 2").steps[1].expr
-    es = ElasticsearchSource("http://x:1").apply_filter(disj)
-    qw = QuickwitSource("http://x:1").apply_filter(disj)
+    es = compile_filter(disj, flavor="elasticsearch")
+    qw = compile_filter(disj, flavor="quickwit")
     assert es["bool"]["minimum_should_match"] == 1
     assert "minimum_should_match" not in qw["bool"]
     assert es["bool"]["should"] == qw["bool"]["should"]
@@ -120,6 +120,7 @@ def test_es_search_round_trip_live_wire(spark):
     import http.server
     import json
     import threading
+    import urllib.parse
 
     from miso_spark.sources.external import ElasticsearchSource
 
@@ -159,11 +160,12 @@ def test_es_search_round_trip_live_wire(spark):
     try:
         src = ElasticsearchSource(f"http://127.0.0.1:{srv.server_port}")
         expr = parse_kql("c.logs | where level == 'error'").steps[1].expr
-        dsl = src.apply_filter(expr)
-        df = src.search(spark, "logs", query=dsl)
-        assert captured["path"] == "/logs/_search"
-        # the wire body is exactly the es_dsl-compiled query
-        assert captured["body"]["query"] == {"term": {"level": {"value": "error"}}}
+        df = src.search(spark, "logs", src.handle("logs").apply_filter(expr))
+        assert urllib.parse.urlparse(captured["path"]).path == "/logs/_search"
+        # the wire query is exactly the es_dsl-compiled filter
+        assert captured["body"]["query"] == {
+            "bool": {"must": [compile_filter(expr, flavor="elasticsearch")]}
+        }
         got = {(r["msg"], r["count"]) for r in df.collect()}
         assert got == {("boom", 2), ("bad", 5)}
     finally:

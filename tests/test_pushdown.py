@@ -466,6 +466,8 @@ def test_splunk_failed_job_raises(spark):
 
     from miso_spark.sources.external import SplunkSource
 
+    state = {"done": False}
+
     class Handler(http.server.BaseHTTPRequestHandler):
         def _send(self, obj):
             body = json.dumps(obj).encode()
@@ -481,7 +483,7 @@ def test_splunk_failed_job_raises(spark):
         def do_GET(self):
             if "/services/search/jobs/dead" in self.path:
                 self._send({"entry": [{"content": {
-                    "dispatchState": "FAILED", "isDone": False}}]})
+                    "dispatchState": "FAILED", "isDone": state["done"]}}]})
             else:
                 self._send({"status": "ok"})
 
@@ -492,8 +494,11 @@ def test_splunk_failed_job_raises(spark):
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         src = SplunkSource(f"http://127.0.0.1:{srv.server_port}")
-        with pytest.raises(RuntimeError, match="failed"):
-            src.run_job(spark, "search index=x")
+        # Splunk also reports a failed job as done: FAILED wins over
+        # isDone, or the job would read as an empty result
+        for state["done"] in (False, True):
+            with pytest.raises(RuntimeError, match="failed"):
+                src.run_job(spark, "search index=x")
     finally:
         srv.shutdown()
 

@@ -51,36 +51,6 @@ def test_salted_join_rejects_outer(tables):
         salted_join(tables["orders"], tables["customer"], "o_custkey", "c_custkey", how="outer")
 
 
-def test_bucketed_join_has_no_exchange(spark, tables, tmp_path_factory):
-    from miso_spark.sources.bucketing import bucketed_table, save_bucketed
-
-    save_bucketed(tables["orders"], "b_orders", "o_custkey", num_buckets=8)
-    save_bucketed(
-        tables["customer"].withColumnRenamed("c_custkey", "o_custkey"),
-        "b_customer",
-        "o_custkey",
-        num_buckets=8,
-    )
-    # at this scale Spark rightly prefers broadcast; force the shuffle
-    # path to show the bucketed layout replaces the exchange
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = bucketed_table(spark, "b_orders").join(
-            bucketed_table(spark, "b_customer"), "o_custkey"
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        # correctness too, not just plan shape
-        n_plain = tables["orders"].join(
-            tables["customer"], tables["orders"].o_custkey == tables["customer"].c_custkey
-        ).count()
-        assert j.count() == n_plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def test_approx_row_count_uses_footers_not_scan(spark):
     """File-backed frames size from parquet footer metadata (VERDICT r2
     #4): exact for a plain scan, env hint wins, and non-file frames

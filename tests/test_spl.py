@@ -54,10 +54,8 @@ def test_unpushable():
 
 
 def test_splunk_source_apply_filter():
-    from miso_spark.sources.external import SplunkSource
-
     expr = parse_kql("c.t | where level == 'error'").steps[1].expr
-    assert SplunkSource("http://x:1").apply_filter(expr) == SplFilter(
+    assert compile_filter_spl(expr) == SplFilter(
         search='level=CASE("error")'
     )
 
