@@ -476,34 +476,20 @@ class Compiler:
                         # pre-run the negotiation's plan rewrites so
                         # the step OBJECTS the dynamic filter caches
                         # by identity (prejoined joins) are the ones
-                        # that survive into the residual. The identity
-                        # assumption only holds when the rewrites have
-                        # ACTUALLY converged — optimize_steps caps its
-                        # internal loop at max_rounds, so confirm a
-                        # fixpoint (one extra no-op call) and keep
-                        # iterating a few outer rounds if it was still
-                        # moving; a plan that never settles skips the
-                        # dynamic filter rather than caching a JoinStep
-                        # object negotiate would rebuild (its persisted
-                        # producer would be orphaned and recomputed).
-                        pred = make_absorb_predicate(step, src)
-                        tail = tuple(steps[i + 1 :])
-                        converged = False
-                        for _ in range(5):
-                            new_tail = optimize_steps(tail, can_absorb=pred)
-                            if new_tail == tail:
-                                converged = True
-                                break
-                            tail = new_tail
-                        steps[i + 1 :] = list(tail)
+                        # that survive into the residual: the result is
+                        # a fixpoint, so negotiation's own rewrite pass
+                        # returns these steps unchanged
+                        steps[i + 1 :] = optimize_steps(
+                            tuple(steps[i + 1 :]),
+                            can_absorb=make_absorb_predicate(step, src),
+                        )
                         # consumer-is-this-scan dynamic filter: a
                         # downstream join's small right side runs
                         # first and its observed keys land here as a
                         # Filter step, which negotiate then pushes
                         # into the wire request (scan.rs:102
                         # apply_dynamic_filter parity)
-                        if converged:
-                            self._scan_side_dynamic_filter(steps, i, src, env)
+                        self._scan_side_dynamic_filter(steps, i, src, env)
                     from miso_spark.sources.pushdown import (
                         negotiate_to_fixpoint,
                     )

@@ -28,10 +28,16 @@ only ahead of external-connector negotiation (compiler.py), where the
 reference's optimizer position is observable: which steps the service
 absorbs vs which stay engine-side. ``optimize_steps`` runs the passes
 to fixpoint, like Optimizer::optimize looping pass groups
-(miso-optimizations/src/lib.rs:156-205).
+(miso-optimizations/src/lib.rs:156-205): its result is returned
+unchanged by a second call, or it raises. A union push records what it
+split in ``Union.pushed``, standing in for the reference's own Mux*
+merge step types, so a merge copy is never split again.
 """
 
 from __future__ import annotations
+
+from collections import Counter
+from dataclasses import replace
 
 from miso_spark import plan as P
 from miso_spark.exprs import (
@@ -420,12 +426,7 @@ def _rewrite_summarize(sum_step, renames, literals, exprs):
             new_aggs.append((name, P.Agg(agg.kind, exprs[f])))
             continue
         new_aggs.append((name, agg))
-    from dataclasses import replace as _dc_replace
-
-    return (
-        _dc_replace(sum_step, aggs=tuple(new_aggs), by=new_by),
-        post,
-    )
+    return replace(sum_step, aggs=tuple(new_aggs), by=new_by), post
 
 
 def _propagation_hazard(lead, middle, end, renames, literals, exprs) -> bool:
@@ -911,7 +912,12 @@ def push_steps_into_union(steps: list, can_absorb=None) -> tuple[list, bool]:
     blocks ``apply_union`` from ever seeing the union run — one merged
     multi-index search becomes N separate wire searches. When the
     predicate says the outer copy won't absorb, keep the step after
-    the unions (the pre-r9 shape: merged search + engine-side step)."""
+    the unions (the pre-r9 shape: merged search + engine-side step).
+
+    A limit/top/summarize/count push leaves a merge copy after the
+    unions and marks each union's ``pushed``; a run whose unions are
+    all marked is not pushed again, wherever other passes move the
+    copies."""
     for i in range(len(steps)):
         if not isinstance(steps[i], P.Union):
             continue
@@ -926,9 +932,7 @@ def push_steps_into_union(steps: list, can_absorb=None) -> tuple[list, bool]:
         # the reference): each branch and the main stream cap
         # independently, and a MERGE copy stays after the unions (the
         # reference's MuxLimit/MuxTopN — here the same plain step) to
-        # cap the combined stream. Guard against re-firing on an
-        # already-pushed shape: the main-stream copy would sit directly
-        # before the union run.
+        # cap the combined stream.
         capping = isinstance(step, (P.Limit, P.Top))
         summarizing = isinstance(step, P.SummarizeStep)
         counting = isinstance(step, P.CountStep)
@@ -941,14 +945,13 @@ def push_steps_into_union(steps: list, can_absorb=None) -> tuple[list, bool]:
             continue
         if summarizing and not _summarize_push_safe(step):
             continue
-        if (capping or summarizing or counting) and i > 0 and isinstance(
-            steps[i - 1],
-            # a summarize merge copy also follows a pushed CountStep
-            (type(step), P.CountStep) if summarizing else type(step),
+        if (capping or summarizing or counting) and all(
+            u.pushed for u in steps[i:j]
         ):
-            # already-pushed shape: the main-stream partial/cap copy
-            # sits directly before the union run — splitting the
-            # post-union merge copy again would stack layers forever
+            # already pushed: the step after the run is the merge copy
+            # (the reference's Mux* step), which re-aggregates or re-caps
+            # the branches' copies. Any mark counts, not this kind's: a
+            # CountStep's merge copy is a SummarizeStep.
             continue
         if summarizing:
             split = split_summarize_for_union(step)
@@ -967,17 +970,6 @@ def push_steps_into_union(steps: list, can_absorb=None) -> tuple[list, bool]:
         else:
             branch_step = step
             tail_steps = [step] if capping else []
-        if all(
-            u.sub.steps and u.sub.steps[-1] == branch_step
-            for u in steps[i:j]
-        ):
-            # second already-pushed guard, robust when OTHER passes
-            # move the main-stream copy away from the union run
-            # (project_propagation hoisting a pushed Top through an
-            # extend): every branch already ends with this exact copy
-            # — re-pushing the merge copy would stack duplicates every
-            # fixpoint round and never converge
-            continue
         if can_absorb is not None and not can_absorb(branch_step):
             continue
         # record WHAT was pushed: negotiation may only merge a
@@ -1496,9 +1488,7 @@ def propagate_filter_constraints(steps: list) -> tuple[list, bool]:
                     ch = ch or ne != bf.expr
                     new_by.append(P.ByField(ne, bf.name))
                 if ch:
-                    from dataclasses import replace as _dc_replace
-
-                    out[j] = _dc_replace(t, by=tuple(new_by))
+                    out[j] = replace(t, by=tuple(new_by))
                     changed = True
                 break  # schema changes past the summarize
             if isinstance(t, (P.Extend, P.Rename, P.Project)):
@@ -1589,9 +1579,7 @@ def fold_exprs(steps: list) -> tuple[list, bool]:
                 for n, a in s.aggs
             )
             if nb != s.by or na != s.aggs:
-                from dataclasses import replace as _dc_replace
-
-                out[i] = _dc_replace(s, aggs=na, by=nb)
+                out[i] = replace(s, aggs=na, by=nb)
                 changed = True
     return out, changed
 
@@ -1657,6 +1645,11 @@ MAX_OPT_WORK = 50_000_000
 #: rounds at every nesting level — a (rounds × sub-plans)^depth
 #: product the plan-size guard never sees.
 MAX_OPT_ROUNDS_TOTAL = 100_000
+#: fixpoint ROUNDS per optimize_steps call (one nesting level). A chain
+#: of k extends before a filter/summarize takes k rounds to inline, so
+#: legitimate plans need tens; 100 is also Catalyst's default
+#: spark.sql.optimizer.maxIterations. Not converging within it raises.
+MAX_OPT_ROUNDS = 100
 
 
 def _charge_work(units: int) -> None:
@@ -1693,19 +1686,16 @@ def _bounded_plan_size(steps, budget: int) -> int:
     return n
 
 
-def optimize_steps(
-    steps, max_rounds: int = 20, can_absorb=None, push_unions: bool = True
-) -> tuple:
+def optimize_steps(steps, can_absorb=None) -> tuple:
     """Run the pushdown-enabling passes to fixpoint over ``steps``
     (tuple in, tuple out), recursing into union/join/let sub-plans.
-    ``can_absorb`` gates :func:`push_steps_into_union` (see there); it
-    describes the OUTER scan's connector, so it is not forwarded into
-    sub-plans (their scans negotiate with their own connectors).
-    ``push_unions=False`` disables the union pushes entirely — used on
-    negotiation RESIDUALS, where the pre-union copy of an
-    already-pushed step has been absorbed into the handle and the pass
-    would mistake the post-union merge copy for a fresh push (stacking
-    a second partial into every branch)."""
+    The result is a true fixpoint — ``optimize_steps(out) == out`` —
+    or the call raises the "optimizer runaway" ``RuntimeError``: after
+    :data:`MAX_OPT_ROUNDS` rounds at one level, or when one of the
+    size/depth/work budgets below trips. ``can_absorb`` gates
+    :func:`push_steps_into_union` (see there); it describes the OUTER
+    scan's connector, so it is not forwarded into sub-plans (their
+    scans negotiate with their own connectors)."""
     depth = getattr(_opt_tls, "depth", 0)
     if depth > MAX_OPT_DEPTH:
         raise RuntimeError(
@@ -1720,7 +1710,7 @@ def optimize_steps(
         _opt_tls.rounds = 0
     _opt_tls.depth = depth + 1
     try:
-        return _optimize_steps_inner(steps, max_rounds, can_absorb, push_unions)
+        return _optimize_steps_inner(steps, can_absorb)
     finally:
         _opt_tls.depth = depth
         if depth == 0:
@@ -1728,9 +1718,9 @@ def optimize_steps(
             _opt_tls.rounds = None
 
 
-def _optimize_steps_inner(steps, max_rounds, can_absorb, push_unions) -> tuple:
+def _optimize_steps_inner(steps, can_absorb) -> tuple:
     out = list(steps)
-    for _ in range(max_rounds):
+    for _ in range(MAX_OPT_ROUNDS):
         r = getattr(_opt_tls, "rounds", None)
         if r is not None:
             _opt_tls.rounds = r = r + 1
@@ -1738,20 +1728,18 @@ def _optimize_steps_inner(steps, max_rounds, can_absorb, push_unions) -> tuple:
                 raise RuntimeError(
                     f"optimizer runaway: fixpoint rounds exceeded "
                     f"{MAX_OPT_ROUNDS_TOTAL} across sub-plan recursions "
-                    f"(pass ping-pong — top shapes "
-                    f"{[type(s).__name__ for s in out[:8]]})"
+                    f"(pass ping-pong — top shapes {_shape(out)})"
                 )
-        if len(out) > MAX_OPT_STEPS or (
-            _bounded_plan_size(out, MAX_OPT_TOTAL_STEPS)
-            > MAX_OPT_TOTAL_STEPS
-        ):
-            from collections import Counter
-
-            shape = Counter(type(s).__name__ for s in out).most_common(5)
+        if len(out) > MAX_OPT_STEPS:
             raise RuntimeError(
-                f"optimizer runaway: plan grew past "
-                f"{MAX_OPT_TOTAL_STEPS} total steps (top-level "
-                f"{len(out)}, top shapes {shape})"
+                f"optimizer runaway: plan grew past {MAX_OPT_STEPS} "
+                f"top-level steps ({len(out)}, top shapes {_shape(out)})"
+            )
+        if _bounded_plan_size(out, MAX_OPT_TOTAL_STEPS) > MAX_OPT_TOTAL_STEPS:
+            raise RuntimeError(
+                f"optimizer runaway: plan grew past {MAX_OPT_TOTAL_STEPS} "
+                f"total steps counting sub-plans (top-level {len(out)}, "
+                f"top shapes {_shape(out)})"
             )
         changed = False
         # recurse into sub-plans each round — first so a union sub-plan
@@ -1761,27 +1749,14 @@ def _optimize_steps_inner(steps, max_rounds, can_absorb, push_unions) -> tuple:
         # right conditions) gets normalized inside it too.
         # Identity-preserving: an unchanged step keeps its object — the
         # compiler keys per-run caches by step identity (prejoined
-        # joins). push_unions forwards: a push_unions=False residual
-        # re-optimize must not run union pushes inside nested sub-plans
-        # either (the already-pushed shape guards are a backstop, not
-        # the invariant). can_absorb stays scan-local by design.
+        # joins). A changed step keeps every other field, Union.pushed
+        # included. can_absorb stays scan-local by design.
         for i, s in enumerate(out):
             if isinstance(s, (P.Union, P.JoinStep, P.Let)):
-                sub = optimize_steps(
-                    s.sub.steps, max_rounds, push_unions=push_unions
-                )
-                if sub == tuple(s.sub.steps):
-                    continue
-                changed = True
-                if isinstance(s, P.Union):
-                    out[i] = P.Union(P.Plan(sub))
-                elif isinstance(s, P.JoinStep):
-                    out[i] = P.JoinStep(
-                        s.left_on, s.right_on, P.Plan(sub),
-                        s.how, s.partitions, s.broadcast,
-                    )
-                else:
-                    out[i] = P.Let(s.name, P.Plan(sub))
+                sub = optimize_steps(s.sub.steps)
+                if sub != tuple(s.sub.steps):
+                    out[i] = replace(s, sub=P.Plan(sub))
+                    changed = True
         out, c = fold_exprs(out)
         changed = changed or c
         out, c = propagate_filter_constraints(out)
@@ -1798,9 +1773,15 @@ def _optimize_steps_inner(steps, max_rounds, can_absorb, push_unions) -> tuple:
         changed = changed or c
         out, c = push_project_into_join(out)
         changed = changed or c
-        if push_unions:
-            out, c = push_steps_into_union(out, can_absorb)
-            changed = changed or c
+        out, c = push_steps_into_union(out, can_absorb)
+        changed = changed or c
         if not changed:
-            break
-    return tuple(out)
+            return tuple(out)
+    raise RuntimeError(
+        f"optimizer runaway: no fixpoint after {MAX_OPT_ROUNDS} rounds "
+        f"(top shapes {_shape(out)})"
+    )
+
+
+def _shape(steps) -> list:
+    return Counter(type(s).__name__ for s in steps).most_common(5)

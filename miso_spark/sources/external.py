@@ -298,12 +298,11 @@ def _http(url: str, auth_header: str | None, timeout_s: float,
 
 
 class ExternalHttpSource(Source):
-    """Base for HTTP-service connectors: holds the endpoint, probes a
-    health route on first use, reports unreachability precisely, and
-    turns fetched rows into DataFrames."""
+    """Base for HTTP-service connectors: holds the endpoint, reports
+    unreachability precisely on the first failed request, and turns
+    fetched rows into DataFrames."""
 
     connector_type = "external"
-    health_path = "/"
 
     def __init__(self, url: str, timeout_s: float = 2.0,
                  auth: ConnectorAuth | None = None,
@@ -374,23 +373,23 @@ class ExternalHttpSource(Source):
             except Exception:  # noqa: BLE001 - context may be gone
                 pass
 
-    def _connect(self) -> None:
+    def _request(self, path: str, body=None, method: str | None = None,
+                 form: list | None = None):
+        """Driver-side request (see :func:`_http`) → decoded JSON,
+        counting the response in ``bytes_downloaded``. A service that
+        cannot be reached raises :class:`ConnectorUnavailableError`; an
+        HTTP error status propagates as ``urllib.error.HTTPError``."""
         try:
-            _http(f"{self.url}{self.health_path}", self.auth.header,
-                  self.timeout_s, self.accept_invalid_certs)
+            raw = _http(f"{self.url}{path}", self.auth.header, self.timeout_s,
+                        self.accept_invalid_certs, body, method, form)
+        except urllib.error.HTTPError:
+            raise
         except (urllib.error.URLError, OSError, ValueError) as e:
             raise ConnectorUnavailableError(
                 f"{self.connector_type} connector: service at {self.url!r} is "
                 f"not reachable ({e}); this environment has no external "
                 f"services — use parquet_dir/json_dir/csv_dir/memory"
             ) from None
-
-    def _request(self, path: str, body=None, method: str | None = None,
-                 form: list | None = None):
-        """Driver-side request (see :func:`_http`) → decoded JSON,
-        counting the response in ``bytes_downloaded``."""
-        raw = _http(f"{self.url}{path}", self.auth.header, self.timeout_s,
-                    self.accept_invalid_certs, body, method, form)
         self.bytes_downloaded += len(raw)
         return json.loads(raw)
 
@@ -521,7 +520,6 @@ class EsProtocolSource(ExternalHttpSource):
 
         if not self.stats_fields:
             return None
-        self._connect()
         out: dict[str, dict[str, FieldStats]] = {}
         for collection, fields in self.stats_fields.items():
             body = {
@@ -546,7 +544,6 @@ class EsProtocolSource(ExternalHttpSource):
         from miso_spark.sources.pushdown import decode_aggregations
 
         handle = handle if handle is not None else self.handle(collection)
-        self._connect()
         body = handle.build_search_body()
         index = f"{self.api_prefix}/{handle.indexes(collection)}"
 
@@ -626,7 +623,6 @@ class QuickwitSource(EsProtocolSource):
     """
 
     connector_type = "quickwit"
-    health_path = "/api/v1/version"
     capabilities = EsProtocolSource.capabilities | {CAP_RAW}
 
     api_prefix = "/api/v1/_elastic"
@@ -708,7 +704,6 @@ class ElasticsearchSource(EsProtocolSource):
     """
 
     connector_type = "elasticsearch"
-    health_path = "/_cluster/health"
 
 
 def _scroll_pages(request, search_path: str, scroll_path: str, keepalive: str,
@@ -847,7 +842,6 @@ class SplunkSource(ExternalHttpSource):
     """
 
     connector_type = "splunk"
-    health_path = "/services/server/info"
     capabilities = frozenset(
         {CAP_FILTER, CAP_PROJECT, CAP_EXTEND, CAP_LIMIT, CAP_TOPN,
          CAP_COUNT, CAP_SUMMARIZE, CAP_UNION}
@@ -925,7 +919,6 @@ class SplunkSource(ExternalHttpSource):
 
         if not self.stats_fields:
             return None
-        self._connect()
         ident = re.compile(r"^[A-Za-z0-9_.:@-]+$")
         out: dict[str, dict[str, FieldStats]] = {}
         for collection, fields in self.stats_fields.items():
@@ -1025,7 +1018,6 @@ class SplunkSource(ExternalHttpSource):
 
         if preview_interval_s is None:
             preview_interval_s = self.preview_interval_s
-        self._connect()
         sid = self.create_job(spl, previews=True)
         round_id = 0
         for content in self._job_polls(sid):
@@ -1051,7 +1043,6 @@ class SplunkSource(ExternalHttpSource):
         into ``slices`` contiguous offset ranges, one Spark partition
         each, every task paging its range with the same offset/count
         requests the driver loop would send."""
-        self._connect()
         sid = self.create_job(spl)
         n = self.poll_until_done(sid)
         if self.slices > 1 and n > self.batch_size:

@@ -599,12 +599,8 @@ def negotiate_to_fixpoint(plan: P.Plan, handle, source=None):
     )
     while True:
         handle, residual = negotiate(P.Plan(tail), handle, source)
-        # union pushes are first-pass only: once negotiate absorbed the
-        # pre-union copy, re-running them on the residual would mistake
-        # the post-union merge copy for a fresh push and stack a second
-        # partial into every branch
         new_tail = (residual.steps[0],) + optimize_steps(
-            residual.steps[1:], can_absorb=can_absorb, push_unions=False
+            residual.steps[1:], can_absorb=can_absorb
         )
         if new_tail == tuple(residual.steps):
             # refused-tail narrowing (eliminate_unused_fields.rs

@@ -465,7 +465,7 @@ def _parse(path: str) -> tuple[str, dict]:
 
 class QuickwitStub(_StubServer):
     """Speaks the ES-compatible surface under /api/v1/_elastic plus
-    /api/v1/version (health) and /api/v1/indexes (discovery)."""
+    /api/v1/indexes (discovery)."""
 
     def __init__(self, indexes: dict[str, list[dict]],
                  ts_fields: dict[str, str] | None = None):
@@ -476,8 +476,6 @@ class QuickwitStub(_StubServer):
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)
         body = json.loads(raw) if raw else None
-        if path == "/api/v1/version":
-            return {"version": "stub"}
         if path == "/api/v1/indexes":
             return [
                 {
@@ -514,8 +512,6 @@ class ElasticStub(_StubServer):
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)
         body = json.loads(raw) if raw else None
-        if path == "/_cluster/health":
-            return {"status": "green"}
         if path == "/_search/scroll":
             if method == "DELETE":
                 sid = (body or {}).get("scroll_id")
@@ -943,8 +939,6 @@ class SplunkStub(_StubServer):
 
     def _route(self, method: str, path: str, raw: bytes):
         path, params = _parse(path)
-        if path == "/services/server/info":
-            return {"version": "stub"}
         if path == "/services/search/jobs" and method == "POST":
             form = urllib.parse.parse_qs(raw.decode())
             spl = form["search"][0]

@@ -304,8 +304,8 @@ def test_es_driver_search_sends_auth(spark):
 
 
 def test_accept_invalid_certs_builds_insecure_context(monkeypatch):
-    """_open passes an unverified SSL context iff the connector was
-    configured with accept_invalid_certs (splunk/mod.rs:128,939)."""
+    """Driver requests pass an unverified SSL context iff the connector
+    was configured with accept_invalid_certs (splunk/mod.rs:128,939)."""
     import ssl
 
     import miso_spark.sources.external as ext
@@ -319,13 +319,37 @@ def test_accept_invalid_certs_builds_insecure_context(monkeypatch):
     monkeypatch.setattr(ext.urllib.request, "urlopen", fake_urlopen)
     src = SplunkSource("https://sec.example:8089", accept_invalid_certs=True)
     with pytest.raises(Exception):
-        src._connect()
+        src._request("/services/server/info")
     assert captured["context"].verify_mode == ssl.CERT_NONE
     captured.clear()
     plain = SplunkSource("https://sec.example:8089")
     with pytest.raises(Exception):
-        plain._connect()
+        plain._request("/services/server/info")
     assert "context" not in captured
+
+
+def test_request_maps_only_connection_failures(monkeypatch):
+    """A driver request that cannot reach the service raises
+    ConnectorUnavailableError; an HTTP error status from a reachable
+    service propagates as HTTPError with its code."""
+    import urllib.error
+
+    import miso_spark.sources.external as ext
+
+    def refuse(req, **kw):
+        raise urllib.error.URLError(ConnectionRefusedError(111, "refused"))
+
+    def busy(req, **kw):
+        raise urllib.error.HTTPError(req.full_url, 503, "busy", {}, None)
+
+    src = ElasticsearchSource("http://es.example:9200")
+    monkeypatch.setattr(ext.urllib.request, "urlopen", refuse)
+    with pytest.raises(ext.ConnectorUnavailableError, match="not reachable"):
+        src._request("/logs/_search", {})
+    monkeypatch.setattr(ext.urllib.request, "urlopen", busy)
+    with pytest.raises(urllib.error.HTTPError) as err:
+        src._request("/logs/_search", {})
+    assert err.value.code == 503
 
 
 def test_timeout_s_config_key_applies(spark):

@@ -176,9 +176,7 @@ class _Stub:
             def do_GET(self):
                 body = self._read_body()
                 stub.requests.append((self.path, body))
-                if self.path == "/api/v1/version":
-                    self._send({"version": "stub"})
-                elif self.path == "/api/v1/_elastic/_search/scroll":
+                if self.path == "/api/v1/_elastic/_search/scroll":
                     self._send({"hits": {"hits": []}})
                 elif "/_search" in self.path:
                     index = self.path.split("/_elastic/")[1].split("/")[0]

@@ -115,7 +115,7 @@ def test_apply_filter_on_external_sources():
 
 def test_es_search_round_trip_live_wire(spark):
     """VERDICT r2 #7: an in-process HTTP stub speaking just enough ES
-    (_cluster/health + {index}/_search) asserts the compiled DSL lands
+    ({index}/_search) asserts the compiled DSL lands
     on the wire exactly as built and hits come back as a DataFrame."""
     import http.server
     import json
@@ -133,9 +133,6 @@ def test_es_search_round_trip_live_wire(spark):
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
-
-        def do_GET(self):
-            self._send({"status": "green"})
 
         def do_POST(self):
             n = int(self.headers["Content-Length"])

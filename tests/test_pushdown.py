@@ -250,7 +250,7 @@ def test_decode_aggregations_no_group_by_strips_placeholder():
 
 class _QuickwitStub:
     """Just enough of Quickwit's ES-compatible API for the bridge:
-    version probe, scrolled _search, scroll continuation, _count."""
+    scrolled _search, scroll continuation, _count."""
 
     def __init__(self, pages, count=0, aggregations=None):
         import http.server
@@ -277,9 +277,7 @@ class _QuickwitStub:
             def do_GET(self):
                 body = self._read_body()
                 stub.requests.append((self.path, body))
-                if self.path == "/api/v1/version":
-                    self._send({"version": "stub"})
-                elif self.path.endswith("/_count"):
+                if self.path.endswith("/_count"):
                     self._send({"count": stub.count})
                 elif self.path == "/api/v1/_elastic/_search/scroll":
                     page = stub.pages.pop(0) if stub.pages else []
@@ -436,8 +434,6 @@ def test_splunk_job_protocol_round_trip_live_wire(spark):
                         "dispatchState": "DONE" if done else "RUNNING",
                         "isDone": done, "resultCount": 3}}]}
                 )
-            else:  # health probe
-                self._send({"status": "ok"})
 
         def log_message(self, *a):
             pass
@@ -743,9 +739,6 @@ def test_es_handle_search_count_and_aggs(spark):
             self.send_header("Content-Length", str(len(payload)))
             self.end_headers()
             self.wfile.write(payload)
-
-        def do_GET(self):  # health
-            self._send({"status": "green"})
 
         def do_POST(self):
             n = int(self.headers["Content-Length"])
@@ -1255,17 +1248,11 @@ def test_scroll_context_deleted_on_early_termination(spark):
 
     class QwHandler(_Common):
         def do_GET(self):
-            self._read()
-            if self.path == "/api/v1/version":
-                self._send({"version": "stub"})
-            else:  # _search: one big page, scroll id present
-                self._send({"_scroll_id": "qs1", "hits": {"hits": [
-                    {"_source": {"m": i}} for i in range(2)]}})
+            self._read()  # _search: one big page, scroll id present
+            self._send({"_scroll_id": "qs1", "hits": {"hits": [
+                {"_source": {"m": i}} for i in range(2)]}})
 
     class EsHandler(_Common):
-        def do_GET(self):
-            self._send({"status": "green"})
-
         def do_POST(self):
             self._read()
             self._send({"_scroll_id": "es1", "hits": {"hits": [
@@ -1403,9 +1390,7 @@ def test_static_fields_replaced_in_pushdown_and_restored_on_rows(spark):
             n = int(self.headers.get("Content-Length") or 0)
             body = json.loads(self.rfile.read(n)) if n else None
             reqs.append((self.path, body))
-            if self.path == "/api/v1/version":
-                self._send({"version": "stub"})
-            elif "/_search" in self.path:
+            if "/_search" in self.path:
                 self._send({"hits": {"hits": [
                     {"_source": {"ts": "2024-01-02T00:00:00Z", "m": 1}}]}})
             else:
@@ -1547,9 +1532,6 @@ def test_quickwit_sliced_scroll_distributed_fetch(spark):
 
         def do_GET(self):
             body = self._read()
-            if self.path == "/api/v1/version":
-                self._send({"version": "stub"})
-                return
             with lock:
                 state["paths"].append(self.path.split("?")[0])
                 if "/_search/scroll" not in self.path:
@@ -1658,8 +1640,6 @@ def test_splunk_distributed_offset_fetch(spark):
                 self._send({"entry": [{"content": {
                     "dispatchState": "DONE", "isDone": True,
                     "resultCount": len(docs)}}]})
-            else:  # health probe
-                self._send({"status": "ok"})
 
         def log_message(self, *a):
             pass
@@ -1733,9 +1713,7 @@ def test_compiler_adopts_sliced_fetch_rdd_into_run_ledger(spark):
 
         def do_GET(self):
             body = self._read()
-            if self.path == "/api/v1/version":
-                self._send({"version": "stub"})
-            elif "/_search/scroll" in self.path:
+            if "/_search/scroll" in self.path:
                 self._send({"hits": {"hits": []}})
             else:
                 sl = (body or {}).get("slice", {"id": 0, "max": 1})
@@ -1803,6 +1781,73 @@ def test_union_branches_get_pushed_filter_over_the_wire(spark):
             assert {"term": {"user": {"value": "a"}}} in body["query"]["bool"]["must"]
     finally:
         stub.shutdown()
+
+
+@pytest.mark.parametrize("branch", ["m.b", "n.b"])
+def test_union_summarize_split_once_through_compiler(spark, monkeypatch, branch):
+    """A summarize after a union splits into per-branch partials and one
+    merge copy exactly once through Compiler.run, whether the union
+    merges into one multi-index search (same connector, m.b) or stays
+    engine-side with its own per-branch request (n.b): every residual
+    the compiler executes holds at most one partial summarize in the
+    main stream and in each branch, and the rows equal a memory-source
+    run."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(__file__))
+    from search_stubs import QuickwitStub
+
+    import miso_spark.sources.pushdown as pd
+    from miso_spark.compiler import Compiler
+    from miso_spark.sources import MemorySource, SourceRegistry
+    from miso_spark.sources.external import QuickwitSource
+
+    a = [{"id": i, "x": i % 5, "g": f"g{i % 3}"} for i in range(12)]
+    b = [{"id": 100 + i, "x": i % 4} for i in range(7)]
+    q = (
+        f"m.a | union ({branch}) | extend e1 = 7 | project e1, g, id"
+        " | summarize mx = max(e1), n = count() by b = bin(id, 2)"
+    )
+    residuals = []
+    negotiate = pd.negotiate_to_fixpoint
+
+    def spy(plan, handle, source=None):
+        handle, residual = negotiate(plan, handle, source)
+        residuals.append(residual)
+        return handle, residual
+
+    monkeypatch.setattr(pd, "negotiate_to_fixpoint", spy)
+
+    def rows(reg):
+        return sorted(
+            (float(r["b"]), r["mx"], r["n"])
+            for r in Compiler(reg).run(parse_kql(q)).collect()
+        )
+
+    def partials(steps):
+        return sum(isinstance(s, P.SummarizeStep) and s.partial for s in steps)
+
+    stub = QuickwitStub({"a": a, "b": b})
+    try:
+        got = rows(
+            SourceRegistry(spark)
+            .register("m", QuickwitSource(stub.url))
+            .register("n", QuickwitSource(stub.url))
+        )
+    finally:
+        stub.shutdown()
+    mem = MemorySource()
+    for name, docs in (("a", a), ("b", b)):
+        mem.put(name, spark.read.json(
+            spark.sparkContext.parallelize([json.dumps(d) for d in docs])))
+    assert got == rows(SourceRegistry(spark).register("m", mem).register("n", mem))
+    assert residuals
+    for res in residuals:
+        assert partials(res.steps) <= 1, res
+        for s in res.steps:
+            if isinstance(s, P.Union):
+                assert partials(s.sub.steps) <= 1, res
 
 
 def test_identical_topn_reabsorb_keeps_zero_limit():

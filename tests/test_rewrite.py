@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 
 from miso_spark import plan as P
-from miso_spark.exprs import BinOp, Exists, Extract, Field, Lit
+from miso_spark.exprs import Bin, BinOp, Exists, Extract, Field, Lit
 from miso_spark.kql import parse_kql
 from miso_spark.rewrite import (
     optimize_steps,
@@ -1267,3 +1267,94 @@ class TestRunawayGuards:
             rw._opt_tls.depth = 0
             rw._opt_tls.work = None
             rw._opt_tls.rounds = None
+
+    def test_ping_pong_raises_within_the_round_cap(self, monkeypatch):
+        """A pass pair that never settles raises after MAX_OPT_ROUNDS
+        rounds instead of returning a plan that is still moving."""
+        import time
+
+        import miso_spark.rewrite as rw
+
+        def flip(steps):
+            out = list(steps)
+            out[-1] = P.Limit(7 - out[-1].n)
+            return out, True
+
+        monkeypatch.setattr(rw, "fold_exprs", flip)
+        t0 = time.perf_counter()
+        with pytest.raises(RuntimeError, match="optimizer runaway: no fixpoint"):
+            optimize_steps(parse_kql("c.t | take 3").steps)
+        assert time.perf_counter() - t0 < 1.0
+
+    @pytest.mark.parametrize(
+        "budget,limit,q,message",
+        [
+            ("MAX_OPT_STEPS", 3, "c.t | take 3 | take 2 | take 1",
+             "past 3 top-level steps"),
+            ("MAX_OPT_TOTAL_STEPS", 5, "c.t | union (c.u | take 3 | take 2 | take 1)",
+             "past 5 total steps counting sub-plans"),
+        ],
+    )
+    def test_size_guard_names_the_budget_that_tripped(
+        self, monkeypatch, budget, limit, q, message
+    ):
+        import miso_spark.rewrite as rw
+
+        monkeypatch.setattr(rw, budget, limit)
+        with pytest.raises(RuntimeError, match=message):
+            optimize_steps(parse_kql(q).steps)
+
+
+#: project_propagation folds the constant column's project past the
+#: branch partials, so neither neighbour of the union run looks like a
+#: pushed shape; only the union's ``pushed`` mark tells
+UNION_CONST_SUMMARIZE = (
+    "m.a | union (m.b) | extend e1 = 7 | project e1, g, id"
+    " | summarize mx = max(e1), n = count() by b = bin(id, 2)"
+)
+
+
+def test_union_summarize_push_keeps_its_mark_and_converges():
+    """The summarize splits once into per-branch partials and one merge
+    copy. The union keeps ``pushed`` after project_propagation rewrites
+    its branch (the push appended a SummarizeStep; the branch now ends
+    in the folded Project), so the merge copy is never split again."""
+    out = opt(UNION_CONST_SUMMARIZE)
+    partial = P.SummarizeStep(
+        (("n", P.Agg("count", None)),),
+        (P.ByField(Bin(Field.of("id"), Lit(2)), "b"),),
+        partial=True,
+    )
+    folded = P.Project((
+        P.ProjectField(Field.of("n"), "n"),
+        P.ProjectField(Field.of("b"), "b"),
+        P.ProjectField(Lit(7), "mx"),
+    ))
+    merge = P.SummarizeStep(
+        (("mx", P.Agg("max", Field.of("mx"))), ("n", P.Agg("sum", Field.of("n")))),
+        (P.ByField(Field.of("b"), "b"),),
+    )
+    assert out == (
+        P.Scan("m", "a"),
+        partial,
+        folded,
+        P.Union(
+            P.Plan((P.Scan("m", "b"), partial, folded)),
+            pushed=frozenset({"summarize"}),
+        ),
+        merge,
+    )
+    assert out[3].pushed == frozenset({"summarize"})
+    assert optimize_steps(out) == out
+
+
+def test_long_extend_chain_reaches_a_fixpoint_in_one_call():
+    """Each round inlines one more extend into the filter, so a chain of
+    30 extends needs 30 rounds; one call still returns a fixpoint, with
+    the filter moved next to the scan."""
+    chain = " | ".join(
+        f"extend a{j} = {'x' if j == 1 else f'a{j - 1}'} + 1" for j in range(1, 31)
+    )
+    once = opt(f"c.t | {chain} | where a30 > 3")
+    assert optimize_steps(once) == once
+    assert kinds(once)[:2] == ["Scan", "Filter"]

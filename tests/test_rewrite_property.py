@@ -295,6 +295,12 @@ _R11_DCOUNT_AVG_MIX = (
     "m.a | union (m.b) | summarize av = avg(x), dc = dcount(y),"
     " n = count() by g"
 )
+#: the union push re-split its own merge copy every round (stacking one
+#: partial summarize per round until the round cap)
+_UNION_CONST_SUMMARIZE = (
+    "m.a | union (m.b) | extend e1 = 7 | project e1, g, id"
+    " | summarize mx = max(e1), n = count() by b = bin(id, 2)"
+)
 _SEEDS = (
     _R10_BYLESS_FOLD,
     _R10_GLOBAL_DROP,
@@ -303,6 +309,7 @@ _SEEDS = (
     _R11_DCOUNT_SPLIT,
     _R11_DCOUNT_GLOBAL,
     _R11_DCOUNT_AVG_MIX,
+    _UNION_CONST_SUMMARIZE,
 )
 
 
