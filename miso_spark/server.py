@@ -789,7 +789,8 @@ class MisoServer:
                 # a client disconnect can abort the in-flight jobs — the
                 # reference's CancellationToken drop-guard
                 # (http_server.rs:340-371, cancel_iter.rs). Set before
-                # parsing: source resolution runs jobs too (a parquet
+                # parsing: a collection's first scan, or its first scan
+                # after its files changed, runs jobs too (a parquet
                 # schema read), and they belong to this query.
                 qgroup = f"miso-query-{qid}"
                 server_self.miso.spark.sparkContext.setJobGroup(

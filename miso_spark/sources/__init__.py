@@ -20,15 +20,27 @@ Connector kinds:
   (miso_spark.sources.external): send negotiated pushdown requests to
   the live service over HTTP (Quickwit and Elasticsearch share one
   ES-protocol client); an unreachable service fails at connect time.
+
+Scan memo: a file-backed source resolves each collection (file
+listing, schema inference, footer sniffs, key discovery) once per
+Spark session and keeps the result, keyed on ``(session, listing
+stamp)``. The stamp is the sorted ``(relative path, size, mtime_ns)``
+of every file under the collection path. A changed stamp is the one
+invalidation rule: a ``write``/``tee``, an external file drop, a file
+replaced in place and a deleted collection all change it. Each scan
+gets a fresh-attribute-id copy of the stored frame, so one query can
+scan a collection twice (self-join, self-union, two ``let``s over it).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # ---------------------------------------------------------------------------
 # capability vocabulary — one name per Connector::apply_* hook in the
@@ -52,6 +64,11 @@ class Source:
     scan. The compiler enforces the negotiated subset (raw scans,
     writes); Catalyst executes the scan-step pushdowns for file-backed
     sources.
+
+    File-backed sources route ``table()`` through :meth:`_memo_scan`:
+    one entry per collection, ``(session, listing stamp, DataFrame)``,
+    reused while the session is the same and the stamp is equal,
+    replaced otherwise. A changed listing is the only invalidation.
     """
 
     capabilities: frozenset[str] = frozenset()
@@ -67,6 +84,29 @@ class Source:
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
         raise NotImplementedError
+
+    def _memo_scan(
+        self,
+        spark: SparkSession,
+        collection: str,
+        path: str,
+        read: Callable[[], DataFrame],
+    ) -> DataFrame:
+        """``read()`` behind the per-collection scan memo.
+
+        The stamp is taken before ``read()`` runs, so a write racing a
+        miss stores an older stamp and the next call rebuilds. Two
+        concurrent misses both build; the last one stored wins. The
+        caller gets ``toDF(*columns)`` — same plan, fresh attribute ids
+        — never the stored frame, so two scans of one collection in
+        one query do not share column ids."""
+        stamp = _listing_stamp(path)
+        memo = self.__dict__.setdefault("_scans", {})
+        entry = memo.get(collection)
+        if entry is None or entry[0] is not spark or entry[1] != stamp:
+            entry = memo[collection] = (spark, stamp, read())
+        df = entry[2]
+        return df.toDF(*df.columns)
 
     def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
         raise NotImplementedError(f"{type(self).__name__} is read-only")
@@ -99,6 +139,25 @@ class Source:
         return cache.get(collection, field)
 
 
+def _listing_stamp(path: str) -> tuple:
+    """Sorted ``(relative path, size, mtime_ns)`` of every file under
+    ``path``, recursively (Hive-style partition directories count). A
+    plain file stamps as itself; a missing path stamps ``()``."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:  # removed mid-walk
+                continue
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def _nano_ts_columns(path: str) -> list[str]:
     """Columns stored as parquet timestamp[ns], which Spark reads as
     nano longs under ``spark.sql.legacy.parquet.nanosAsLong``.
@@ -125,6 +184,22 @@ def _nano_ts_columns(path: str) -> list[str]:
         if c.physical_type == "INT64" and "timestamp" in lt and "nano" in lt:
             out.append(c.name)
     return out
+
+
+def _engine_types(df: DataFrame, nano_cols: list[str]) -> DataFrame:
+    """Parquet read → engine timestamp types: nano longs and
+    TIMESTAMP_NTZ both become session-TZ TIMESTAMP."""
+    for c in nano_cols:
+        # ns → µs truncation matches how µs-native engines read the file
+        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
+    return _denaive_ntz(df)
+
+
+def _relation_schema(df: DataFrame) -> StructType:
+    """The reader's schema under a resolved single-relation scan, before
+    any projection on top (nano columns still longs, NTZ still NTZ)."""
+    leaf = df._jdf.queryExecution().analyzed().collectLeaves().head()
+    return StructType.fromJson(json.loads(leaf.schema().json()))
 
 
 def _denaive_ntz(df: DataFrame) -> DataFrame:
@@ -159,11 +234,12 @@ class ParquetDirSource(Source):
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
         path = os.path.join(self.directory, f"{collection}.parquet")
-        df = spark.read.parquet(path)
-        for c in _nano_ts_columns(path):
-            # ns → µs truncation matches how µs-native engines read the file
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
-        return _denaive_ntz(df)
+        return self._memo_scan(
+            spark,
+            collection,
+            path,
+            lambda: _engine_types(spark.read.parquet(path), _nano_ts_columns(path)),
+        )
 
     def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(os.path.join(self.directory, f"{collection}.parquet"))
@@ -174,8 +250,20 @@ class ParquetDirSource(Source):
         """Incremental file-stream over the collection (one trigger per
         ``max_files_per_trigger`` files) — feeds partial-stream queries
         (miso-workflow/src/partial_stream.rs analog)."""
+        from pyspark.sql.types import LongType, TimestampType
+
         path = os.path.join(self.directory, f"{collection}.parquet")
-        schema = spark.read.parquet(path).schema
+        # the memoized batch resolution supplies the reader schema; a
+        # column that is a long there and a timestamp in the batch frame
+        # is a nano-timestamp column
+        batch = self.table(spark, collection)
+        schema = _relation_schema(batch)
+        nano_cols = [
+            f.name
+            for f in schema.fields
+            if isinstance(f.dataType, LongType)
+            and isinstance(batch.schema[f.name].dataType, TimestampType)
+        ]
         reader = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", max_files_per_trigger
         )
@@ -187,9 +275,7 @@ class ParquetDirSource(Source):
             df = reader.option("pathGlobFilter", f"{collection}.parquet").parquet(
                 self.directory
             )
-        for c in _nano_ts_columns(path):
-            df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
-        return _denaive_ntz(df)
+        return _engine_types(df, nano_cols)
 
 
 class JsonDirSource(Source):
@@ -200,7 +286,8 @@ class JsonDirSource(Source):
         self.static_fields = static_fields or {}
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return spark.read.json(os.path.join(self.directory, f"{collection}.jsonl"))
+        path = os.path.join(self.directory, f"{collection}.jsonl")
+        return self._memo_scan(spark, collection, path, lambda: spark.read.json(path))
 
     def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).json(os.path.join(self.directory, f"{collection}.jsonl"))
@@ -237,8 +324,9 @@ class JsonDynamicDirSource(Source):
         keys = self.keys
         if isinstance(keys, dict):
             keys = keys.get(collection)
-        return read_json_dynamic(
-            spark, os.path.join(self.directory, f"{collection}.jsonl"), keys
+        path = os.path.join(self.directory, f"{collection}.jsonl")
+        return self._memo_scan(
+            spark, collection, path, lambda: read_json_dynamic(spark, path, keys)
         )
 
     def stream_table(
@@ -248,15 +336,15 @@ class JsonDynamicDirSource(Source):
         partial-streamable (r11). Streams need the key set up front:
         configured keys when given, else a one-time discovery pass
         over the files already on disk (bounded by distinct key
-        count, same aggregation the batch path runs)."""
-        from miso_spark.dynamic import read_json_dynamic, read_json_dynamic_stream
+        count, taken from the memoized batch resolution)."""
+        from miso_spark.dynamic import read_json_dynamic_stream
 
         keys = self.keys
         if isinstance(keys, dict):
             keys = keys.get(collection)
         path = os.path.join(self.directory, f"{collection}.jsonl")
         if not keys:
-            keys = read_json_dynamic(spark, path).columns
+            keys = self.table(spark, collection).columns
         if not keys:
             # empty/keyless collection: the batch path returns a
             # zero-column frame; a stream needs ≥1 column, so derive a
@@ -291,9 +379,8 @@ class DynamicParquetDirSource(Source):
         self.static_fields = static_fields or {}
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return spark.read.parquet(
-            os.path.join(self.directory, f"{collection}.parquet")
-        )
+        path = os.path.join(self.directory, f"{collection}.parquet")
+        return self._memo_scan(spark, collection, path, lambda: spark.read.parquet(path))
 
     def write(self, df: DataFrame, collection: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(
@@ -310,8 +397,12 @@ class CsvDirSource(Source):
         self.static_fields = static_fields or {}
 
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
-        return spark.read.csv(
-            os.path.join(self.directory, f"{collection}.csv"), header=True, inferSchema=True
+        path = os.path.join(self.directory, f"{collection}.csv")
+        return self._memo_scan(
+            spark,
+            collection,
+            path,
+            lambda: spark.read.csv(path, header=True, inferSchema=True),
         )
 
 

@@ -257,8 +257,9 @@ def test_query_status_collection(spark):
 
 
 def test_query_jobs_all_run_in_query_job_group(server, spark):
-    """Source resolution runs a Spark job (the parquet schema read);
-    it must run inside the query's ``miso-query-<id>`` group like the
+    """Source resolution of a collection not yet scanned (or changed
+    on disk) runs a Spark job (the parquet schema read); it must run
+    inside the query's ``miso-query-<id>`` group like the
     rest of the query, so a client disconnect cancels it and per-query
     counts include it. A parquet-backed /query adds no job without a
     group."""
