@@ -24,23 +24,26 @@ Connector kinds:
 Scan memo: a file-backed source resolves each collection (file
 listing, schema inference, footer sniffs, key discovery) once per
 Spark session and keeps the result, keyed on ``(session, listing
-stamp)``. The stamp is the sorted ``(relative path, size, mtime_ns)``
-of every file under the collection path. A changed stamp is the one
-invalidation rule: a ``write``/``tee``, an external file drop, a file
-replaced in place and a deleted collection all change it. Each scan
-gets a fresh-attribute-id copy of the stored frame, so one query can
-scan a collection twice (self-join, self-union, two ``let``s over it).
+stamp)``. The stamp is the sorted ``(relative path, size, ctime_ns)``
+of every file under the collection path, symlinked directories
+followed. A changed stamp is the one invalidation rule: a
+``write``/``tee``, an external file drop and a file replaced in place
+(even with its old mtime kept) all change it. Only an existing local
+path is memoized; a URI (``file://``, ``s3a://``, ``hdfs://``) or a
+missing path is read afresh on every scan, as without the memo. Each
+scan gets a fresh-attribute-id copy of the stored frame, so one query
+can scan a collection twice (self-join, self-union, two ``let``s over
+it).
 """
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 # ---------------------------------------------------------------------------
 # capability vocabulary — one name per Connector::apply_* hook in the
@@ -68,7 +71,9 @@ class Source:
     File-backed sources route ``table()`` through :meth:`_memo_scan`:
     one entry per collection, ``(session, listing stamp, DataFrame)``,
     reused while the session is the same and the stamp is equal,
-    replaced otherwise. A changed listing is the only invalidation.
+    replaced otherwise. A changed listing is the only invalidation;
+    a path the stamp cannot list (a URI, a missing path) is not
+    memoized.
     """
 
     capabilities: frozenset[str] = frozenset()
@@ -99,8 +104,11 @@ class Source:
         concurrent misses both build; the last one stored wins. The
         caller gets ``toDF(*columns)`` — same plan, fresh attribute ids
         — never the stored frame, so two scans of one collection in
-        one query do not share column ids."""
+        one query do not share column ids. A path ``_listing_stamp``
+        cannot list is returned as ``read()``, unmemoized."""
         stamp = _listing_stamp(path)
+        if stamp is None:
+            return read()
         memo = self.__dict__.setdefault("_scans", {})
         entry = memo.get(collection)
         if entry is None or entry[0] is not spark or entry[1] != stamp:
@@ -139,22 +147,27 @@ class Source:
         return cache.get(collection, field)
 
 
-def _listing_stamp(path: str) -> tuple:
-    """Sorted ``(relative path, size, mtime_ns)`` of every file under
-    ``path``, recursively (Hive-style partition directories count). A
-    plain file stamps as itself; a missing path stamps ``()``."""
+def _listing_stamp(path: str) -> tuple | None:
+    """Sorted ``(relative path, size, ctime_ns)`` of every file under
+    ``path``, recursively (Hive-style partition directories count,
+    symlinked directories are followed as Hadoop's local listing
+    does). ctime, unlike mtime, cannot be set back by a copy that
+    preserves times. A plain file stamps as itself. None for a URI or
+    a missing path: those are not listed here, so not memoized."""
+    if urlparse(path).scheme or not os.path.exists(path):
+        return None
     if os.path.isfile(path):
         st = os.stat(path)
-        return (("", st.st_size, st.st_mtime_ns),)
+        return (("", st.st_size, st.st_ctime_ns),)
     out = []
-    for root, _dirs, files in os.walk(path):
+    for root, _dirs, files in os.walk(path, followlinks=True):
         for name in files:
             full = os.path.join(root, name)
             try:
                 st = os.stat(full)
             except FileNotFoundError:  # removed mid-walk
                 continue
-            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+            out.append((os.path.relpath(full, path), st.st_size, st.st_ctime_ns))
     return tuple(sorted(out))
 
 
@@ -193,13 +206,6 @@ def _engine_types(df: DataFrame, nano_cols: list[str]) -> DataFrame:
         # ns → µs truncation matches how µs-native engines read the file
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` DIV 1000)"))
     return _denaive_ntz(df)
-
-
-def _relation_schema(df: DataFrame) -> StructType:
-    """The reader's schema under a resolved single-relation scan, before
-    any projection on top (nano columns still longs, NTZ still NTZ)."""
-    leaf = df._jdf.queryExecution().analyzed().collectLeaves().head()
-    return StructType.fromJson(json.loads(leaf.schema().json()))
 
 
 def _denaive_ntz(df: DataFrame) -> DataFrame:
@@ -250,20 +256,8 @@ class ParquetDirSource(Source):
         """Incremental file-stream over the collection (one trigger per
         ``max_files_per_trigger`` files) — feeds partial-stream queries
         (miso-workflow/src/partial_stream.rs analog)."""
-        from pyspark.sql.types import LongType, TimestampType
-
         path = os.path.join(self.directory, f"{collection}.parquet")
-        # the memoized batch resolution supplies the reader schema; a
-        # column that is a long there and a timestamp in the batch frame
-        # is a nano-timestamp column
-        batch = self.table(spark, collection)
-        schema = _relation_schema(batch)
-        nano_cols = [
-            f.name
-            for f in schema.fields
-            if isinstance(f.dataType, LongType)
-            and isinstance(batch.schema[f.name].dataType, TimestampType)
-        ]
+        schema = spark.read.parquet(path).schema
         reader = spark.readStream.schema(schema).option(
             "maxFilesPerTrigger", max_files_per_trigger
         )
@@ -275,7 +269,7 @@ class ParquetDirSource(Source):
             df = reader.option("pathGlobFilter", f"{collection}.parquet").parquet(
                 self.directory
             )
-        return _engine_types(df, nano_cols)
+        return _engine_types(df, _nano_ts_columns(path))
 
 
 class JsonDirSource(Source):

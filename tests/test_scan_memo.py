@@ -154,6 +154,39 @@ def test_file_replaced_in_place_is_seen(spark, tmp_path, make, suffix, write):
     assert reg.table("s", "c").count() == 40
 
 
+def test_same_size_replace_with_old_mtime_is_seen(spark, tmp_path):
+    """A copy that keeps the old file's size and mtime (``cp -p``,
+    ``rsync -a``) still changes the file's ctime, so a schema inferred
+    from the old file is not reused."""
+    path = tmp_path / "c.jsonl"
+    path.write_text('{"x": 1}\n')
+    st = os.stat(path)
+    m = _miso(spark, j=JsonDirSource(str(tmp_path)))
+    assert _count(m, "j.c | where x == 1 | count") == 1
+    time.sleep(0.01)
+    path.write_text('{"y": 1}\n')
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(path).st_size == st.st_size
+    assert os.stat(path).st_mtime_ns == st.st_mtime_ns
+    assert _count(m, "j.c | where y == 1 | count") == 1
+
+
+def test_uri_path_is_read_afresh(spark, tmp_path):
+    """A ``file://`` (or any scheme) path is not listed by the stamp,
+    so it is not memoized: every scan sees the latest write."""
+    src = DynamicParquetDirSource(f"file://{tmp_path}")
+    m = _miso(spark, pq=src)
+    src.write(spark.range(3), "c")
+    assert _count(m, "pq.c | count") == 3
+    m.query("pq.c | union (pq.c) | write pq.d")
+    src.write(spark.range(8), "c")
+    assert _count(m, "pq.c | count") == 8
+    assert _count(m, "pq.d | count") == 6
+    m.query("pq.c | write pq.d")
+    assert _count(m, "pq.d | count") == 8
+    assert not getattr(src, "_scans", {})
+
+
 def test_deleted_collection_raises_like_a_fresh_read(spark, tmp_path):
     from pyspark.errors import AnalysisException
 
@@ -203,24 +236,18 @@ def _jobs_in_group(spark, group: str, fn) -> list[int]:
 
 def test_repeated_resolution_starts_no_job(spark):
     """The first scan of a collection infers the parquet schema with a
-    Spark job; a second scan of the unchanged collection starts none,
-    and neither does a stream resolution over the warm memo."""
-    src = ParquetDirSource(SF_DIR)
-    reg = SourceRegistry(spark).register("t", src)
+    Spark job; a second scan of the unchanged collection starts none."""
+    reg = SourceRegistry(spark).register("t", ParquetDirSource(SF_DIR))
     assert _jobs_in_group(spark, "scan-memo-cold", lambda: reg.table("t", "customer"))
     assert _jobs_in_group(spark, "scan-memo-warm", lambda: reg.table("t", "customer")) == []
-    reg.table("t", "events")
-    stream = []
-    assert _jobs_in_group(
-        spark, "scan-memo-stream", lambda: stream.append(src.stream_table(spark, "events"))
-    ) == []
-    assert stream[0].schema == reg.table("t", "events").schema
 
 
 def test_listing_stamp(tmp_path):
     from miso_spark.sources import _listing_stamp
 
-    assert _listing_stamp(str(tmp_path / "missing")) == ()
+    assert _listing_stamp(str(tmp_path / "missing")) is None
+    assert _listing_stamp(f"file://{tmp_path}") is None
+    assert _listing_stamp(f"s3a://bucket/{tmp_path.name}") is None
     f = tmp_path / "a.parquet"
     f.write_bytes(b"12345")
     (stamp,) = _listing_stamp(str(f))
@@ -233,3 +260,10 @@ def test_listing_stamp(tmp_path):
         (os.path.join("k=1", "p"), 1),
         ("q", 2),
     ]
+    # a symlinked partition directory is listed through, as Hadoop's
+    # local file system lists it
+    other = tmp_path / "elsewhere"
+    other.mkdir()
+    (other / "r").write_bytes(b"333")
+    (d / "k=2").symlink_to(other, target_is_directory=True)
+    assert (os.path.join("k=2", "r"), 3) in [(p, n) for p, n, _ in _listing_stamp(str(d))]

@@ -259,27 +259,37 @@ def test_query_status_collection(spark):
 def test_query_jobs_all_run_in_query_job_group(server, spark):
     """Source resolution of a collection not yet scanned (or changed
     on disk) runs a Spark job (the parquet schema read); it must run
-    inside the query's ``miso-query-<id>`` group like the
-    rest of the query, so a client disconnect cancels it and per-query
-    counts include it. A parquet-backed /query adds no job without a
-    group."""
+    inside the query's ``miso-query-<id>`` group like the rest of the
+    query, so a client disconnect cancels it and per-query counts
+    include it. A fresh connector has an empty scan memo, so the first
+    query's scan is cold and its group holds more jobs than the same
+    query's warm repeat; neither adds a job without a group."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    resp = _post(server, "/query", {"query": "t.region | count"})
-    assert b"event: done" in resp.read()
-    # fence: the status store applies job events in submission order,
-    # so once this later job is visible every query job is too
-    sc.setJobGroup("test-job-group-fence", "fence")
-    try:
-        spark.range(1).count()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup("test-job-group-fence"):
-            assert time.monotonic() < deadline, "fence job never registered"
-            time.sleep(0.05)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    server.add_connector("cold", {"type": "parquet_dir", "path": SF_DIR})
+
+    def query_jobs(fence: str) -> list[int]:
+        before = set(tracker.getJobIdsForGroup(None))
+        resp = _post(server, "/query", {"query": "cold.region | count"})
+        qid = resp.headers["X-Query-Id"]
+        assert b"event: done" in resp.read()
+        # fence: the status store applies job events in submission
+        # order, so once this later job is visible every query job is
+        sc.setJobGroup(fence, "fence")
+        try:
+            spark.range(1).count()
+            deadline = time.monotonic() + 30
+            while not tracker.getJobIdsForGroup(fence):
+                assert time.monotonic() < deadline, "fence job never registered"
+                time.sleep(0.05)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert set(tracker.getJobIdsForGroup(None)) - before == set()
+        return list(tracker.getJobIdsForGroup(f"miso-query-{qid}"))
+
+    cold = query_jobs("test-job-group-fence-cold")
+    warm = query_jobs("test-job-group-fence-warm")
+    assert len(cold) > len(warm)
 
 
 def test_client_disconnect_cancels_job_group(server, spark):
