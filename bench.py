@@ -4,10 +4,12 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Each query is executed to completion (results drained to the driver or
-a noop sink) and timed individually; `value` is the sum. Each query
-runs SPARK_GRAFT_BENCH_REPEAT times (default 3) and records the best —
-single-run numbers at sub-second query times are dominated by
+Every entry is timed by `measure`: the clock starts before the entry's
+builder runs (KQL parse + compile + source resolution, or a library
+operator's plan build with any eager jobs it starts) and stops after
+the results are drained through a noop sink; `value` is the sum. Each
+query runs SPARK_GRAFT_BENCH_REPEAT times (default 3) and records the
+best — single-run numbers at sub-second query times are dominated by
 scheduler/stage-launch variance (the r01→SURVEY §8 13.25s-vs-11s drift
 was exactly that). Compare against BASELINE.md per-query records.
 """
@@ -53,7 +55,6 @@ HEADLINE = [
     "dynamic_filter",
     "dynamic_at_rest",
     "skew_join_aqe",
-    "skew_join_salted",
     "multimodal_decode",
     "dedup_embedding_lsh",
 ]
@@ -101,100 +102,55 @@ def _b_dynamic_at_rest(spark, sf_dir):
     """Bench-only entry (r9): the same dynamic filter as
     `dynamic_filter`, but over VARIANT AT REST — events.props ingested
     once into a variant-columned parquet table (dynamic_parquet_dir
-    model) and scanned columnar per query, instead of try_parse_json
-    per row per query. The delta between this entry and
-    `dynamic_filter` is the parse cost the at-rest story amortizes
-    away; the remaining gap to the typed baseline is the price of
-    per-row dynamic typing itself."""
+    model, written by `ensure_fixtures`) and scanned columnar per
+    query, instead of try_parse_json per row per query. The delta
+    between this entry and `dynamic_filter` is the parse cost the
+    at-rest story amortizes away; the remaining gap to the typed
+    baseline is the price of per-row dynamic typing itself."""
     from pyspark.sql import functions as F
 
     from miso_spark import dynamic as dyn
-    from miso_spark.sources import ParquetDirSource
 
-    out = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_cache",
-        f"dynrest_{os.path.basename(sf_dir.rstrip('/'))}.parquet",
-    )
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        ev = ParquetDirSource(sf_dir).table(spark, "events")
-        (
-            ev.select(
-                "event_id",
-                F.try_variant_get(
-                    F.try_parse_json(F.col("props")), "$.k", "variant"
-                ).alias("kv"),
-            )
-            .write.mode("overwrite").parquet(out)
-        )
-    df = spark.read.parquet(out)
+    df = spark.read.parquet(_dynrest_path(sf_dir))
     return df.filter(dyn.vcompare_literal("gt", F.col("kv"), 2)).select("event_id")
 
 
-def _b_skew_join(salted: bool):
+def _b_skew_join_aqe(spark, sf_dir):
     """Hot-key join arm (r9): one key carries ~50% of the fact rows
-    (every even user_id folds to key 0), joined to a per-key dim too
-    wide to broadcast by hint. ``salted=False`` measures Spark's AQE
-    skew-join split handling the straggler partition at runtime;
-    ``salted=True`` measures functions/skew.py salted_join spreading
-    the hot key across 16 salts up front. Both must scale ~linearly
-    (sf1 exponent gate ≤ ~1.0); which wins is the documented tradeoff
-    — AQE needs no plan change, salting caps the worst partition
-    deterministically."""
+    (every even user_id folds to key 0), joined to a per-key dim hinted
+    away from a broadcast, so Spark's AQE skew-join split handles the
+    straggler partition at runtime. Must scale ~linearly (sf1 exponent
+    gate ≤ ~1.0)."""
+    from pyspark.sql import functions as F
 
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
+    from miso_spark.sources import ParquetDirSource
 
-        from miso_spark.functions.skew import salted_join
-        from miso_spark.sources import ParquetDirSource
-
-        ev = ParquetDirSource(sf_dir).table(spark, "events")
-        hot = F.when(F.col("user_id") % 2 == 0, F.lit(0)).otherwise(
-            F.col("user_id")
-        )
-        left = ev.withColumn("k", hot)
-        right = (
-            ev.select(hot.alias("k"))
-            .distinct()
-            .withColumn("w", F.sha2(F.col("k").cast("string"), 256))
-            # hint away the broadcast: the scenario is a replicable-but-
-            # not-broadcastable side, the case salted_join exists for
-            .hint("shuffle_hash")
-        )
-        if salted:
-            joined = salted_join(left, right, "k", "k", num_salts=16)
-            return joined.select("event_id", "w")
-        return left.join(right, left["k"] == right["k"]).select("event_id", "w")
-
-    return run
+    ev = ParquetDirSource(sf_dir).table(spark, "events")
+    hot = F.when(F.col("user_id") % 2 == 0, F.lit(0)).otherwise(F.col("user_id"))
+    left = ev.withColumn("k", hot)
+    right = (
+        ev.select(hot.alias("k"))
+        .distinct()
+        .withColumn("w", F.sha2(F.col("k").cast("string"), 256))
+        # hint away the broadcast: the scenario is a replicable-but-
+        # not-broadcastable side
+        .hint("shuffle_hash")
+    )
+    return left.join(right, left["k"] == right["k"]).select("event_id", "w")
 
 
-#: bench entries that are not driver-catalog queries (no SQL oracle
-#: needed here — correctness lives in pytest; this measures the plan)
 def _b_multimodal_decode(spark, sf_dir):
     """The repo's one Pandas-UDF hot path (r12): real ppm/bmp/png
     decode + nearest-neighbor resize over Arrow batches. Synthesized
-    images are cached as parquet (bench_cache) so the timed region is
-    scan → Arrow → numpy decode (incl. zlib inflate + unfilter for
-    png) / resample → PPM re-encode → noop, i.e. pure Python-stage
-    throughput — a regression here means the Arrow batch path or the
-    decoders got slower, nothing else in the repo uses row-at-a-time
-    Python."""
-    from miso_spark.functions.multimodal import (
-        resize_pixels,
-        synthesize_images,
-    )
+    images are cached as parquet (`ensure_fixtures`) so the timed
+    region is scan → Arrow → numpy decode (incl. zlib inflate +
+    unfilter for png) / resample → PPM re-encode → noop, i.e. pure
+    Python-stage throughput — a regression here means the Arrow batch
+    path or the decoders got slower, nothing else in the repo uses
+    row-at-a-time Python."""
+    from miso_spark.functions.multimodal import resize_pixels
 
-    out = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bench_cache",
-        # v2: the synthesized mix gained png payloads (r12)
-        "multimodal_images_v2.parquet",
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        synthesize_images(spark, n=2000).repartition(8).write.mode(
-            "overwrite"
-        ).parquet(out)
-    media = spark.read.parquet(out)
+    media = spark.read.parquet(_cache_path(MULTIMODAL_IMAGES))
     return resize_pixels(media, max_side=16)
 
 
@@ -216,28 +172,16 @@ def _b_dedup_embedding_lsh(spark, sf_dir):
     )
 
 
+#: bench entries that are not driver-catalog queries (no SQL oracle
+#: needed here — correctness lives in pytest; this measures the plan)
 EXTRA_BENCH = {
     "token_budget_filter": _b_token_budget_filter,
     "dynamic_filter": _b_dynamic_filter,
     "dynamic_at_rest": _b_dynamic_at_rest,
-    "skew_join_aqe": _b_skew_join(salted=False),
-    "skew_join_salted": _b_skew_join(salted=True),
+    "skew_join_aqe": _b_skew_join_aqe,
     "multimodal_decode": _b_multimodal_decode,
     "dedup_embedding_lsh": _b_dedup_embedding_lsh,
 }
-
-
-#: entries timed from plan BUILD through execution (r15, VERDICT r14
-#: #7): token_budget_filter's two-pass prefix sum used to run its
-#: totals collect() at plan-build time — outside the timer — so the
-#: recorded 0.02 s measured only the offset-attach pass. The operator
-#: is now fully lazy (functions/packing.py: offsets broadcast-join
-#: inside the plan, no driver collect), but AQE still materializes the
-#: range-shuffle MAP stage when the partition-pinning localCheckpoint
-#: plans its RDD at build time, so build+execute is the honest window
-#: for this entry. Old-methodology record: 0.022 s best-of-3
-#: (BENCH_r14.json) — re-baselined in BASELINE.md.
-BUILD_TIMED = {"token_budget_filter"}
 
 
 #: multi-file rewrite targets (files per table): the driver's testdata
@@ -318,14 +262,16 @@ def _cache_is_current(marker: str, stamp: str) -> bool:
         return False
 
 
+def _cache_path(name: str) -> str:
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), ".bench_cache", name
+    )
+
+
 def ensure_multifile_dir(spark, base_dir: str) -> str:
     """Materialize (once, cached in-repo) a multi-file copy of
-    ``base_dir``'s tables, partition counts per MULTIFILE_PARTS.
-    Disable with SPARK_GRAFT_MULTIFILE=0 to bench the raw layout."""
-    out = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        ".bench_cache", os.path.basename(base_dir.rstrip("/")),
-    )
+    ``base_dir``'s tables, partition counts per MULTIFILE_PARTS."""
+    out = _cache_path(os.path.basename(base_dir.rstrip("/")))
     marker = os.path.join(out, "_DONE")
     stamp = f"v1 parts={sorted(MULTIFILE_PARTS.items())}"
     if _cache_is_current(marker, stamp):
@@ -348,6 +294,39 @@ def ensure_multifile_dir(spark, base_dir: str) -> str:
     return out
 
 
+#: v2: the synthesized mix gained png payloads (r12)
+MULTIMODAL_IMAGES = "multimodal_images_v2.parquet"
+
+
+def _dynrest_path(sf_dir: str) -> str:
+    return _cache_path(f"dynrest_{os.path.basename(sf_dir.rstrip('/'))}.parquet")
+
+
+def ensure_fixtures(spark, sf_dir: str) -> None:
+    """Write (once, cached in-repo) the inputs that `dynamic_at_rest`
+    and `multimodal_decode` read, so no entry's timed window — its
+    first rep included — contains a one-time file write."""
+    from pyspark.sql import functions as F
+
+    from miso_spark.functions.multimodal import synthesize_images
+    from miso_spark.sources import ParquetDirSource
+
+    out = _dynrest_path(sf_dir)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        ev = ParquetDirSource(sf_dir).table(spark, "events")
+        ev.select(
+            "event_id",
+            F.try_variant_get(
+                F.try_parse_json(F.col("props")), "$.k", "variant"
+            ).alias("kv"),
+        ).write.mode("overwrite").parquet(out)
+    out = _cache_path(MULTIMODAL_IMAGES)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        synthesize_images(spark, n=2000).repartition(8).write.mode(
+            "overwrite"
+        ).parquet(out)
+
+
 # sf1 scaling arm: the five most scale-sensitive headliners run once
 # more against a 10×-scaled dataset derived from sf0.1, and the JSON
 # carries per-query scaling exponents (log10 of the time ratio across
@@ -362,7 +341,6 @@ SF1_HEADLINE = [
     "decontaminate",
     "token_budget_filter",
     "skew_join_aqe",
-    "skew_join_salted",
     # r12 widening: the remaining scale-sensitive operator families —
     # the one-shuffle exact dedup, the zero-shuffle text path, the
     # tagged-union single-shuffle as-of join, the bin-bucketed range
@@ -457,46 +435,74 @@ def ensure_sf1_dir(spark, base_dir: str) -> str:
     return out
 
 
-#: entries whose dominant shuffle's row WIDTH we track (VERDICT r9 #6:
-#: dedup_minhash_verified's banding shuffle is the widest-exponent
-#: entry — a row-width regression (e.g. banding starting to carry text
-#: instead of hashed longs) should surface as bytes/row here before it
-#: costs wall time at sf1)
-SHUFFLE_PROFILE = {
-    "dedup_minhash_verified",
-    "near_dedup_pipeline",
-    # r11: the other width-sensitive exchanges (r10 verdict #7) — the
-    # tagged-union single shuffle (asof), the bin-bucketed hash join
-    # (range), and the two-pass prefix sum (token budget)
-    "asof_join",
-    "range_join",
-    "token_budget_filter",
-}
-
-
-def _shuffle_totals(spark) -> tuple[int, int, int, int]:
-    """Cumulative (shuffle write bytes, records, memory-spill bytes,
-    disk-spill bytes) across all completed stages, from the JVM
-    AppStatusStore (works with spark.ui.enabled false — it backs the
-    REST API). Deltas around a query's runs give the query's shuffle
-    volume; bytes/records is the mean shuffled row width,
-    repeat-count invariant. Spill deltas are the early warning the
-    r11 verdict asked for: a nonzero spill at sf1 means per-task
-    working sets outgrew execution memory — fix partitioning before
-    it costs wall time at the next scale decade."""
-    store = spark.sparkContext._jsc.sc().statusStore()
+def _stages(spark):
+    """Iterator over the stages in the JVM AppStatusStore (works with
+    spark.ui.enabled false — it backs the REST API), newest first. The
+    store keeps only the newest spark.ui.retainedStages (1000) and one
+    bench run starts more than that, so a window is read by stage id:
+    a delta of cumulative totals would go negative once the oldest
+    stages are evicted mid-window."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)  # stage events land async
+    store = sc.statusStore()
     empty = spark.sparkContext._jvm.java.util.ArrayList()
     defaults = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-    stages = store.stageList(empty, *defaults)
+    return store.stageList(empty, *defaults).iterator()
+
+
+def _shuffle_totals(spark, after_stage: int) -> tuple[int, int, int, int]:
+    """(shuffle write bytes, records, memory-spill bytes, disk-spill
+    bytes) summed over the stages with an id above ``after_stage``.
+    Spill is the early warning the r11 verdict asked for: a nonzero
+    spill at sf1 means per-task working sets outgrew execution memory
+    — fix partitioning before it costs wall time at the next scale
+    decade."""
     tot_b = tot_r = tot_ms = tot_ds = 0
-    it = stages.iterator()
+    it = _stages(spark)
     while it.hasNext():
         s = it.next()
+        if s.stageId() <= after_stage:
+            break
         tot_b += s.shuffleWriteBytes()
         tot_r += s.shuffleWriteRecords()
         tot_ms += s.memoryBytesSpilled()
         tot_ds += s.diskBytesSpilled()
     return tot_b, tot_r, tot_ms, tot_ds
+
+
+def measure(spark, name: str, sf_dir: str, reps: int):
+    """Run entry ``name`` (a driver-catalog query or an EXTRA_BENCH
+    builder) ``reps`` times against ``sf_dir`` and return
+    ``(best_s, first_s, profile)``.
+
+    The one timing window of the bench: the clock starts before the
+    builder runs and stops after the noop sink has drained every row,
+    so plan build — KQL parse/compile, source resolution, and any eager
+    job or build-time map stage an operator starts — counts like
+    execution, as it does for a user. ``profile`` is the per-rep
+    shuffle write volume and spill of the stages those runs started
+    (`_shuffle_totals`); bytes/row is the mean shuffled row width, which
+    surfaces a row-width regression (e.g. banding starting to carry
+    text instead of hashed longs) before it costs wall time at scale."""
+    from miso_spark.catalog import CATALOG
+
+    builder = CATALOG.get(name) or EXTRA_BENCH[name]
+    stages = _stages(spark)
+    newest = stages.next().stageId() if stages.hasNext() else -1
+    runs: list[float] = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        runs.append(time.perf_counter() - t0)
+    b, r, ms, ds = _shuffle_totals(spark, newest)
+    profile = {
+        "shuffle_bytes": b // reps,
+        "shuffle_records": r // reps,
+        "bytes_per_row": round(b / r, 2) if r else 0.0,
+        "mem_spill": ms // reps,
+        "disk_spill": ds // reps,
+    }
+    return round(min(runs), 3), round(runs[0], 3), profile
 
 
 def main() -> None:
@@ -509,11 +515,11 @@ def main() -> None:
     spark = get_spark("miso_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # bench against the multi-file rewrite of the testdata (built once,
-    # outside the timed region) — see MULTIFILE_PARTS
-    bench_dir = SF_DIR
-    if os.environ.get("SPARK_GRAFT_MULTIFILE", "1") != "0":
-        bench_dir = ensure_multifile_dir(spark, SF_DIR)
+    # bench against the multi-file rewrite of the testdata, with the
+    # one-time fixtures, all built once outside the timed region — see
+    # MULTIFILE_PARTS and ensure_fixtures
+    bench_dir = ensure_multifile_dir(spark, SF_DIR)
+    ensure_fixtures(spark, bench_dir)
 
     # warm the JVM, codegen, noop sink, and parquet reader paths once so
     # per-query timings measure the queries, not first-use setup
@@ -552,45 +558,17 @@ def main() -> None:
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
     timings: dict[str, float] = {}
     singles: dict[str, float] = {}
-    def build(name, sf_dir):
-        if name in CATALOG:
-            return CATALOG[name](spark, sf_dir)
-        return EXTRA_BENCH[name](spark, sf_dir)
-
     shuffle_profile: dict[str, dict[str, float]] = {}
     for name in HEADLINE:
         if name not in CATALOG and name not in EXTRA_BENCH:
             continue
-        profiled = name in SHUFFLE_PROFILE
-        if profiled:
-            b0, r0, ms0, ds0 = _shuffle_totals(spark)
-        runs: list[float] = []
-        for _ in range(repeat):
-            # noop sink drains every row through the full pipeline
-            # without collecting to the driver; BUILD_TIMED entries
-            # start the clock before plan build (see the set's comment)
-            t0 = time.perf_counter()
-            df = build(name, bench_dir)
-            if name not in BUILD_TIMED:
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        if profiled:
-            b1, r1, ms1, ds1 = _shuffle_totals(spark)
-            db, dr = b1 - b0, r1 - r0
-            shuffle_profile[name] = {
-                "shuffle_bytes": db // repeat,
-                "shuffle_records": dr // repeat,
-                "bytes_per_row": round(db / dr, 2) if dr else 0.0,
-                "mem_spill": (ms1 - ms0) // repeat,
-                "disk_spill": (ds1 - ds0) // repeat,
-            }
         # report BOTH: best-of-N (plan cost, scheduler noise removed —
         # the BASELINE.md regression gate) and the first run (what a
         # cold query actually costs; keeps BENCH files cross-comparable
         # after r2 switched the headline from single-run to best-of-N)
-        timings[name] = round(min(runs), 3)
-        singles[name] = round(runs[0], 3)
+        timings[name], singles[name], shuffle_profile[name] = measure(
+            spark, name, bench_dir, repeat
+        )
 
     try:
         load_end = round(os.getloadavg()[0], 2)
@@ -634,38 +612,19 @@ def main() -> None:
         sf1_profile: dict[str, dict[str, float]] = {}
         sf1_calibs: dict[str, float] = {}
 
-        def timed(name: str, sf_dir: str, reps: int = 2) -> float:
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                df = build(name, sf_dir)
-                if name not in BUILD_TIMED:
-                    t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-            return round(best, 3)
-
         base_timings: dict[str, float] = {}
         for name in SF1_HEADLINE:
             if name not in CATALOG and name not in EXTRA_BENCH:
                 continue
             base_t = timings.get(name)
             if base_t is None:  # not in the sf0.1 headline set
-                base_t = timed(name, bench_dir)
+                base_t = measure(spark, name, bench_dir, 2)[0]
             base_timings[name] = base_t
-            b0, r0, ms0, ds0 = _shuffle_totals(spark)
-            sf1_timings[name] = timed(name, sf1_dir)
-            b1, r1, ms1, ds1 = _shuffle_totals(spark)
-            db, dr = (b1 - b0) // 2, (r1 - r0) // 2
             # width + spill AT SCALE (VERDICT r11 #6): the sf0.1-only
             # gauge can't see a working set outgrowing task memory
-            sf1_profile[name] = {
-                "shuffle_bytes": db,
-                "shuffle_records": dr,
-                "bytes_per_row": round(db / dr, 2) if dr else 0.0,
-                "mem_spill": (ms1 - ms0) // 2,
-                "disk_spill": (ds1 - ds0) // 2,
-            }
+            sf1_timings[name], _, sf1_profile[name] = measure(
+                spark, name, sf1_dir, 2
+            )
             # per-entry sentinel (VERDICT r11 #1): one post-arm reading
             # demonstrably missed mid-arm contention — a drifted entry
             # with a clean neighboring calib is a real regression, an

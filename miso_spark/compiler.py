@@ -556,7 +556,10 @@ class Compiler:
         if isinstance(step, P.ScanVar):
             if step.name not in env:
                 raise KeyError(f"unbound let variable {step.name!r}")
-            return env[step.name]
+            # a fresh-attribute-id copy per use, so a variable can be
+            # used twice in one query (`a | join (a) on k`)
+            bound = env[step.name]
+            return bound.toDF(*bound.columns)
         if isinstance(step, P.ScanRaw):
             # the raw query targets the scanned collection: expose it as
             # a view first (connector-native-query parity — the raw

@@ -35,7 +35,7 @@ from pyspark.sql import SparkSession
 
 from miso_spark.api import MisoSpark
 from miso_spark.kql import parse_kql
-from miso_spark.plan import Let, Plan
+from miso_spark.plan import Plan
 from miso_spark.sources import (
     CsvDirSource,
     DynamicParquetDirSource,
@@ -489,33 +489,27 @@ class MisoServer:
         # error-recovering parse: a 400 lists every broken step, like
         # the reference server's multi-error response
         plan = parse_kql(kql, collect_errors=True)
-        # `views.<name>` scans splice the saved view's steps inline,
-        # recursively (query_to_workflow.rs:70); bare-name references
-        # keep working through let bindings prepended to the query
-        plan = self._resolve_views(plan, ())
-        # a view that no longer resolves (deleted dependency, cycle)
-        # must only fail queries that actually REFERENCE it — the
-        # reference resolves views on use (query_to_workflow.rs), so a
-        # broken saved view can't take down unrelated queries
-        lets = []
-        for name, text in self.views.items():
-            try:
-                lets.append(
-                    Let(name, self._resolve_views(parse_kql(text), (name,)))
-                )
-            except ValueError:
-                continue
-        return Plan(tuple(lets) + plan.steps)
+        return self._resolve_views(plan, ())
 
-    def _resolve_views(self, plan: Plan, seen: tuple) -> Plan:
+    def _resolve_views(self, plan: Plan, seen: tuple, bound=frozenset()) -> Plan:
+        """Splice every saved view the plan uses inline, recursively
+        (query_to_workflow.rs:70): `views.<name>` scans, and bare-name
+        scans of a saved view that no earlier `let` in scope binds
+        (``bound``). Views resolve on use, so a broken saved view
+        (deleted dependency, cycle) only fails queries that reference
+        it."""
         from dataclasses import replace
 
         from miso_spark import plan as P
 
         steps: list = []
         for s in plan.steps:
+            name = None
             if isinstance(s, P.Scan) and s.connector == self.VIEWS_CONNECTOR:
                 name = s.collection
+            elif isinstance(s, P.ScanVar) and s.name not in bound:
+                name = s.name if s.name in self.views else None
+            if name is not None:
                 if name in seen:
                     raise ValueError(
                         f"view '{name}' is part of a reference cycle"
@@ -528,7 +522,11 @@ class MisoServer:
                 sub = self._resolve_views(parse_kql(text), seen + (name,))
                 steps.extend(sub.steps)
             elif isinstance(s, (P.JoinStep, P.Union, P.Let)):
-                steps.append(replace(s, sub=self._resolve_views(s.sub, seen)))
+                steps.append(
+                    replace(s, sub=self._resolve_views(s.sub, seen, bound))
+                )
+                if isinstance(s, P.Let):
+                    bound = bound | {s.name}
             else:
                 steps.append(s)
         return Plan(tuple(steps))

@@ -1,54 +1,9 @@
-"""Scale utilities: salted joins match plain joins; bucketed joins plan
-without exchanges."""
+"""Scale utilities: footer row counts, ANN recall at the sf1 bench
+corpus, and the bench's measurement window."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-
-from miso_spark.sources import ParquetDirSource
-from tests.conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def tables(spark):
-    src = ParquetDirSource(SF_DIR)
-    return {n: src.table(spark, n) for n in ("customer", "orders", "nation")}
-
-
-def test_salted_join_matches_plain_inner(tables):
-    from miso_spark.functions.skew import salted_join
-
-    orders, customer = tables["orders"], tables["customer"]
-    plain = orders.join(customer, orders.o_custkey == customer.c_custkey).select(
-        "o_orderkey", "c_custkey"
-    )
-    salted = salted_join(orders, customer, "o_custkey", "c_custkey", num_salts=8).select(
-        "o_orderkey", "c_custkey"
-    )
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_matches_plain_left(tables):
-    from miso_spark.functions.skew import salted_join
-
-    customer, nation = tables["customer"], tables["nation"]
-    plain = customer.join(nation, customer.c_nationkey == nation.n_nationkey, "left").select(
-        "c_custkey", "n_name"
-    )
-    salted = salted_join(customer, nation, "c_nationkey", "n_nationkey", 4, how="left").select(
-        "c_custkey", "n_name"
-    )
-    assert sorted(map(tuple, salted.collect()), key=str) == sorted(
-        map(tuple, plain.collect()), key=str
-    )
-
-
-def test_salted_join_rejects_outer(tables):
-    from miso_spark.functions.skew import salted_join
-
-    with pytest.raises(ValueError):
-        salted_join(tables["orders"], tables["customer"], "o_custkey", "c_custkey", how="outer")
 
 
 def test_approx_row_count_uses_footers_not_scan(spark):
@@ -101,3 +56,22 @@ def test_ann_recall_floor_at_sf1(spark):
     # scan — must still beat random chance (10/20000) by orders of
     # magnitude
     assert rec["lsh_single"] >= 0.05, rec
+
+
+def test_bench_measure_times_build_through_drain(spark, monkeypatch):
+    """bench.measure's window opens before the entry's builder runs
+    (eager build work counts like execution) and closes after the
+    drain, and every entry gets a shuffle profile of its own runs."""
+    import time
+
+    import bench
+
+    def sleepy(spark, sf_dir):
+        time.sleep(0.3)
+        return spark.range(100).repartition(2)
+
+    monkeypatch.setitem(bench.EXTRA_BENCH, "sleepy_build", sleepy)
+    best, first, profile = bench.measure(spark, "sleepy_build", "unused", 1)
+    assert best >= 0.3 and first >= 0.3, (best, first)
+    assert profile["shuffle_bytes"] > 0, profile
+    assert profile["shuffle_records"] == 100, profile

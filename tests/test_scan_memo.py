@@ -57,8 +57,9 @@ def _miso(spark, **sources) -> MisoSpark:
         "let a = t.nation | where n_regionkey == 1;"
         " let b = t.nation | where n_nationkey < 20; a | join (b) on n_nationkey",
         "let a = t.nation | where n_regionkey == 1; a | union (a) | count",
+        "let a = t.nation | where n_regionkey == 1; a | join (a) on n_nationkey",
     ],
-    ids=["self_join", "self_union", "let_join", "let_union"],
+    ids=["self_join", "self_union", "let_join", "let_union", "let_self_join"],
 )
 def test_self_scans_match_independent_reads(spark, kql):
     """Two scans of one collection in one query each get their own

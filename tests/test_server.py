@@ -916,3 +916,75 @@ def test_join_memory_limit_keeps_broadcast_disabled(spark, tmp_path):
         # serve loop never started — httpd.shutdown() would block
         srv.httpd.server_close()
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+def _frames(server, body) -> list[dict]:
+    """The SSE data frames of one /query call, up to `event: done`."""
+    out = []
+    for raw in _post(server, "/query", body):
+        line = raw.decode().strip()
+        if line.startswith("event: done"):
+            break
+        if line.startswith("data: "):
+            out.append(json.loads(line[6:]))
+    return out
+
+
+@pytest.fixture
+def saved_views(server):
+    """Saves views through the HTTP route; deletes them afterwards."""
+    names = []
+
+    def save(name, query):
+        assert _post(server, f"/views/{name}", {"query": query}).status == 200
+        names.append(name)
+
+    yield save
+    for name in names:
+        urllib.request.urlopen(urllib.request.Request(
+            f"http://127.0.0.1:{server.port}/views/{name}", method="DELETE"))
+
+
+def test_view_on_deleted_connector_fails_only_its_users(server, saved_views):
+    _post(server, "/connectors/gone", {"type": "parquet_dir", "path": SF_DIR})
+    saved_views("gone_regions", "gone.region | count")
+    urllib.request.urlopen(urllib.request.Request(
+        f"http://127.0.0.1:{server.port}/connectors/gone", method="DELETE"))
+    assert _frames(server, {"query": "t.nation | count"}) == [{"Count": 25}]
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(server, "/query", {"query": "gone_regions"})
+    assert "gone" in e.value.read().decode()
+
+
+def test_bare_view_self_join_equals_views_form(server, saved_views):
+    saved_views("w", "t.nation | where n_regionkey == 1")
+    bare = _frames(server, {"query": "w | join (w) on n_nationkey | count"})
+    spliced = _frames(
+        server, {"query": "views.w | join (views.w) on n_nationkey | count"}
+    )
+    assert bare == spliced == [{"Count": 5}]
+
+
+def test_partial_stream_unaffected_by_saved_views(server, saved_views):
+    """A saved view is spliced only where a query uses it, so a query
+    that uses none still starts with its own scan and streams partial
+    rounds."""
+    saved_views("w", "t.nation | where n_regionkey == 1")
+    frames = _frames(server, {
+        "query": "t.nation | summarize c = count() by n_regionkey",
+        "partial_stream": {"debounce": 0},
+    })
+    assert any("_miso_metadata" in f for f in frames), frames
+    final = {f["n_regionkey"]: f["c"] for f in frames if "_miso_metadata" not in f}
+    assert final == {k: 5 for k in range(5)}
+
+
+def test_user_let_shadows_saved_view(server, saved_views):
+    saved_views("w", "t.nation")
+    assert _frames(server, {"query": "w | count"}) == [{"Count": 25}]
+    assert _frames(server, {"query": "let w = t.region; w | count"}) == [{"Count": 5}]
+    # a let's own body is resolved before its name binds: the inner
+    # `w` is still the saved view
+    assert _frames(server, {
+        "query": "let w = w | where n_regionkey == 1; w | count"
+    }) == [{"Count": 5}]
