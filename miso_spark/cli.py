@@ -254,6 +254,21 @@ def repl(run_one, lines: Iterable[str], out=print, err=None) -> list[str]:
     return history
 
 
+def _local_miso(args):  # pragma: no cover - thin shell
+    """The local-mode engine: a session with ``--data-dir`` registered
+    as connector ``t`` and ``--dynamic-dir`` as ``dyn``."""
+    from miso_spark.api import MisoSpark
+    from miso_spark.session import get_spark
+    from miso_spark.sources import JsonDynamicDirSource, ParquetDirSource
+
+    m = MisoSpark(get_spark("miso_spark_cli"))
+    if args.data_dir:
+        m.registry.register("t", ParquetDirSource(args.data_dir))
+    if args.dynamic_dir:
+        m.registry.register("dyn", JsonDynamicDirSource(args.dynamic_dir))
+    return m
+
+
 def main(argv: list[str] | None = None) -> int:  # pragma: no cover - thin shell
     ap = argparse.ArgumentParser(prog="miso-spark", description=__doc__)
     ap.add_argument("query", nargs="?", help="KQL query (omit for a REPL)")
@@ -282,18 +297,7 @@ def main(argv: list[str] | None = None) -> int:  # pragma: no cover - thin shell
             def tui_runner(q: str):
                 return stream_remote(args.server, q, args.partial)
         else:
-            from miso_spark.api import MisoSpark
-            from miso_spark.session import get_spark
-            from miso_spark.sources import JsonDynamicDirSource, ParquetDirSource
-
-            m = MisoSpark(get_spark("miso_spark_cli"))
-            if args.data_dir:
-                m.registry.register("t", ParquetDirSource(args.data_dir))
-            if args.dynamic_dir:
-                m.registry.register("dyn", JsonDynamicDirSource(args.dynamic_dir))
-
-            def tui_runner(q: str):
-                return m.query_rows(q)
+            tui_runner = _local_miso(args).query_rows
 
         run_terminal(tui_runner, args.query, incremental=bool(args.server))
         return 0
@@ -329,15 +333,7 @@ def main(argv: list[str] | None = None) -> int:  # pragma: no cover - thin shell
             # them round-by-round through ResultsWithPreview)
             show(final_rows(run_remote(args.server, q, args.partial)))
     else:
-        from miso_spark.api import MisoSpark
-        from miso_spark.session import get_spark
-        from miso_spark.sources import JsonDynamicDirSource, ParquetDirSource
-
-        m = MisoSpark(get_spark("miso_spark_cli"))
-        if args.data_dir:
-            m.registry.register("t", ParquetDirSource(args.data_dir))
-        if args.dynamic_dir:
-            m.registry.register("dyn", JsonDynamicDirSource(args.dynamic_dir))
+        m = _local_miso(args)
 
         def run_one(q: str) -> None:
             if args.explain:

@@ -417,12 +417,13 @@ class Compiler:
         action and are unpersisted when this thread's NEXT run starts
         (by then the previous query's action has run, in the
         one-query-at-a-time library usage this path serves). Callers
-        that know their query lifecycle — the HTTP server — use
-        :meth:`run_with_caches` and release explicitly. So should any
-        caller still draining run N's iterator when it starts run N+1:
-        the deferred release would unpersist N's producers mid-drain,
-        and while file-backed plans just recompute, a connector-backed
-        producer would re-fetch from the live service."""
+        that own the query lifecycle — ``MisoSpark.run``, behind the
+        HTTP server and the row iterators — use :meth:`run_with_caches`
+        and release explicitly. So should any caller still draining
+        run N's iterator when it starts run N+1: the deferred release
+        would unpersist N's producers mid-drain, and while file-backed
+        plans just recompute, a connector-backed producer would
+        re-fetch from the live service."""
         prev = getattr(self._tls, "pending", None)
         if prev is not None:
             self._tls.pending = None
@@ -434,7 +435,7 @@ class Compiler:
     def run_with_caches(self, plan: P.Plan) -> tuple[DataFrame, "Compiler._RunCtx"]:
         """Like :meth:`run`, but hands back the run's cache ledger:
         call ``ctx.release()`` once the query's results have been
-        consumed (the server does this in its emit finally-block)."""
+        consumed (``MisoSpark.run`` does this when its drain ends)."""
         ctx = Compiler._RunCtx()
         self._tls.ctx = ctx
         try:
@@ -517,11 +518,7 @@ class Compiler:
                     # the batch path (SourceRegistry.table) — absorbed
                     # steps went out in service names (FieldReplacer),
                     # residual steps see the visible names
-                    for to, frm in src.collection_static_fields(
-                        step.collection
-                    ).items():
-                        if frm in df.columns:
-                            df = df.withColumnRenamed(frm, to)
+                    df = src.rename_static_fields(step.collection, df)
                     # the residual tail may have been REWRITTEN (not
                     # just truncated) — splice it in and continue
                     # engine-side right after the scan position

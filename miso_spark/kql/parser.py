@@ -40,10 +40,10 @@ class ParseError(ValueError):
     pass
 
 
-class ParseErrors(ValueError):
-    """Multiple parse errors from a recovery pass (the reference's
-    parser collects every step's error rather than stopping at the
-    first — parser_tests.rs test_error_recovery_collects_multiple_errors).
+class ParseErrors(ParseError):
+    """Every parse error of a query (the reference's parser collects
+    every step's error rather than stopping at the first —
+    parser_tests.rs test_error_recovery_collects_multiple_errors).
     Recovery granularity here is per pipeline step."""
 
     def __init__(self, errors: list[ParseError]):
@@ -161,22 +161,14 @@ class Parser:
 
     # -- query ------------------------------------------------------------
     def parse_query(self) -> list[P.Step]:
-        steps: list[P.Step] = []
-        while self.peek().kind == "let":
-            self.next()
-            name = self.expect("ident").value
-            self.expect("=")
-            sub = self.parse_query()
-            self.expect(";")
-            steps.append(P.Let(str(name), P.Plan(tuple(sub))))
-        steps.append(self.parse_scan())
+        steps = self.parse_query_prefix()
         while self.accept("|"):
             steps.append(self.parse_step())
         return steps
 
-    def parse_query_prefix(self, errors=None, skip=None) -> list[P.Step]:
+    def parse_query_prefix(self) -> list[P.Step]:
         """Let bindings + the initial scan, without the step loop —
-        the error-recovering driver owns the ``|`` loop."""
+        the error-recovering driver owns the top-level ``|`` loop."""
         steps: list[P.Step] = []
         while self.peek().kind == "let":
             self.next()
@@ -693,24 +685,10 @@ def _agg_default_name(agg: P.Agg) -> str:
     return f"{agg.kind}_{arg}"
 
 
-def parse_kql(text: str, collect_errors: bool = False) -> P.Plan:
-    """Parse KQL to a Plan. With ``collect_errors`` a failed step is
-    recorded and parsing resumes at the next ``|`` so ALL broken steps
-    surface in one ``ParseErrors``, like the reference's
-    error-recovering parser."""
-    if collect_errors:
-        return _parse_kql_recovering(text)
-    try:
-        p = Parser(tokenize(text))
-        steps = p.parse_query()
-        if p.peek().kind != "eof":
-            raise ParseError(f"trailing input at pos {p.peek().pos}: {p.peek().kind!r}")
-        return P.Plan(tuple(steps))
-    except ParseError as e:
-        raise _with_line_col(e, text) from None
-
-
-def _parse_kql_recovering(text: str) -> P.Plan:
+def parse_kql(text: str) -> P.Plan:
+    """Parse KQL to a Plan. A failed step is recorded and parsing
+    resumes at the next ``|``, so ALL broken steps surface in one
+    ``ParseErrors``, like the reference's error-recovering parser."""
     p = Parser(tokenize(text))
     steps: list[P.Step] = []
     errors: list[ParseError] = []
@@ -720,7 +698,7 @@ def _parse_kql_recovering(text: str) -> P.Plan:
             p.next()
 
     try:
-        steps.extend(p.parse_query_prefix(errors, skip_to_pipe))
+        steps.extend(p.parse_query_prefix())
     except ParseError as e:
         errors.append(_with_line_col(e, text))
         skip_to_pipe()

@@ -29,6 +29,7 @@ import re
 import threading
 import time
 import uuid
+from contextlib import closing
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
@@ -48,6 +49,13 @@ from miso_spark.sources.external import (
     ElasticsearchSource,
     QuickwitSource,
     SplunkSource,
+)
+from miso_spark.streaming.partial import (
+    METADATA_FIELD,
+    PARTIAL_DONE_FIELD,
+    PARTIAL_ID_FIELD,
+    plan_supports_partial_stream,
+    run_partial_stream,
 )
 
 def _duration_s(cfg: dict, key: str) -> float | None:
@@ -266,6 +274,17 @@ class QueryStatusWriter:
         self._seq = 0
         self._written_seq = 0
 
+    @classmethod
+    def at(cls, registry, target: str) -> "QueryStatusWriter":
+        """A writer into ``target``, a "connector.collection" name."""
+        conn, _, coll = target.partition(".")
+        if not conn or not coll:
+            raise ValueError(
+                "query_status_collection must be in format "
+                f"'connector.collection', got: {target}"
+            )
+        return cls(registry, conn, coll)
+
     _SCHEMA = (
         "id string, status string, error string, start_time timestamp, "
         "end_time timestamp, run_time string, run_time_secs double, "
@@ -362,13 +381,9 @@ class MisoServer:
         self.workflow_limits = dict(self._DEFAULT_WORKFLOW_LIMITS)
         self.status_writer: QueryStatusWriter | None = None
         if query_status_collection is not None:
-            conn, _, coll = query_status_collection.partition(".")
-            if not conn or not coll:
-                raise ValueError(
-                    "query_status_collection must be in format "
-                    f"'connector.collection', got: {query_status_collection}"
-                )
-            self.status_writer = QueryStatusWriter(self.miso.registry, conn, coll)
+            self.status_writer = QueryStatusWriter.at(
+                self.miso.registry, query_status_collection
+            )
         handler = self._make_handler()
         self.httpd = ThreadingHTTPServer((host, port), handler)
         self.port = self.httpd.server_port
@@ -471,25 +486,19 @@ class MisoServer:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(cap))
         for name, ccfg in cfg.get("connectors", {}).items():
             self.add_connector(name, ccfg)
-        qsc = cfg.get("query_status_collection")
-        if qsc:
-            conn, _, coll = qsc.partition(".")
-            if not conn or not coll:
-                raise ValueError(
-                    "query_status_collection must be in format "
-                    f"'connector.collection', got: {qsc}"
-                )
-            self.status_writer = QueryStatusWriter(self.miso.registry, conn, coll)
+        if cfg.get("query_status_collection"):
+            self.status_writer = QueryStatusWriter.at(
+                self.miso.registry, cfg["query_status_collection"]
+            )
 
     #: reserved connector name routing to saved views
     #: (miso-server/src/lib.rs:10 VIEWS_CONNECTOR_NAME)
     VIEWS_CONNECTOR = "views"
 
     def _plan(self, kql: str) -> Plan:
-        # error-recovering parse: a 400 lists every broken step, like
-        # the reference server's multi-error response
-        plan = parse_kql(kql, collect_errors=True)
-        return self._resolve_views(plan, ())
+        # a 400 lists every broken step (parse_kql collects them all),
+        # like the reference server's multi-error response
+        return self._resolve_views(parse_kql(kql), ())
 
     def _resolve_views(self, plan: Plan, seen: tuple, bound=frozenset()) -> Plan:
         """Splice every saved view the plan uses inline, recursively
@@ -531,15 +540,6 @@ class MisoServer:
                 steps.append(s)
         return Plan(tuple(steps))
 
-    def _query_df(self, kql: str):
-        """Compile only (the /explain path): any caches the compile
-        phase persisted are dropped immediately — nothing will execute
-        this frame. Server threads are per-request, so the compiler's
-        deferred next-run release would never fire here."""
-        df, ctx = self.miso.compiler.run_with_caches(self._plan(kql))
-        ctx.release()
-        return df
-
     def _splunk_preview(self, plan: Plan):
         """(source, spl) when the plan is a Splunk scan whose steps ALL
         absorb into one SPL pipeline — the shape the reference streams
@@ -547,7 +547,7 @@ class MisoServer:
         an engine-side residual falls back to the normal paths."""
         from miso_spark.plan import Scan
         from miso_spark.sources.external import SplunkSource
-        from miso_spark.sources.pushdown import negotiate
+        from miso_spark.sources.pushdown import negotiate_to_fixpoint
 
         steps = plan.steps
         if not steps or not isinstance(steps[0], Scan):
@@ -563,7 +563,11 @@ class MisoServer:
             # (splunk/mod.rs:1119,1149,1165 gate on
             # config.enable_partial_stream)
             return None
-        handle, residual = negotiate(plan, src.handle(steps[0].collection), src)
+        # the negotiation the compiler executes through, so a plan
+        # that runs wholly inside Splunk is also the one that previews
+        handle, residual = negotiate_to_fixpoint(
+            plan, src.handle(steps[0].collection), src
+        )
         if len(residual.steps) != 1:
             return None
         return src, handle.build_spl(steps[0].collection), handle
@@ -709,12 +713,8 @@ class MisoServer:
                     if self.path == "/query":
                         return self._query()
                     if self.path == "/explain":
-                        body = self._body()
-                        df = server_self._query_df(body["query"])
-                        plan = df._sc._jvm.PythonSQLUtils.explainString(
-                            df._jdf.queryExecution(), "formatted"
-                        )
-                        return self._json(200, {"plan": plan})
+                        plan = server_self._plan(self._body()["query"])
+                        return self._json(200, {"plan": server_self.miso.explain(plan)})
                     if self.path.startswith("/connectors/"):
                         server_self.add_connector(self.path.rsplit("/", 1)[1], self._body())
                         return self._json(200, {"status": "ok"})
@@ -756,21 +756,29 @@ class MisoServer:
                                 buckets[str(le)] += 1
                         buckets["+Inf"] += 1
 
-            def _query_impl(self):
-                from miso_spark.streaming.partial import (
-                    METADATA_FIELD,
-                    PARTIAL_DONE_FIELD,
-                    PARTIAL_ID_FIELD,
-                    plan_supports_partial_stream,
-                    run_partial_stream,
-                )
+            def _data(self, line: str) -> None:
+                self.wfile.write(f"data: {line}\n\n".encode())
 
+            def _partial_round(self, rid: int, rows) -> None:
+                """One partial round (partial_stream.rs): each row
+                tagged with the round id, then the round's done
+                marker."""
+                for obj in rows:
+                    obj[METADATA_FIELD] = {PARTIAL_ID_FIELD: rid}
+                    self._data(json.dumps(obj))
+                self._data(json.dumps(
+                    {METADATA_FIELD: {PARTIAL_ID_FIELD: rid, PARTIAL_DONE_FIELD: True}}
+                ))
+
+            def _query_impl(self):
                 from datetime import datetime, timezone
 
                 body = self._body()
                 qid = body.get("query_id") or str(uuid.uuid4())
+                text = body.get("query", "")
                 started = datetime.now(timezone.utc).replace(tzinfo=None)
                 sw = server_self.status_writer
+                miso = server_self.miso
 
                 def status(st: str, error: str | None = None, done: bool = False):
                     # query_status.rs lifecycle: planning → running →
@@ -781,52 +789,32 @@ class MisoServer:
                             if done
                             else None
                         )
-                        sw.write(qid, body.get("query", ""), st, error, started, end)
+                        sw.write(qid, text, st, error, started, end)
 
-                # every query executes inside its own Spark job group so
-                # a client disconnect can abort the in-flight jobs — the
-                # reference's CancellationToken drop-guard
-                # (http_server.rs:340-371, cancel_iter.rs). Set before
-                # parsing: a collection's first scan, or its first scan
-                # after its files changed, runs jobs too (a parquet
-                # schema read), and they belong to this query.
-                qgroup = f"miso-query-{qid}"
-                server_self.miso.spark.sparkContext.setJobGroup(
-                    qgroup, body.get("query", "")[:100], interruptOnCancel=True
-                )
                 status("planning")
                 debounce = _parse_partial_stream(body.get("partial_stream"))
                 try:
                     plan = server_self._plan(body["query"])
-                except Exception as e:
-                    status("internal_error", str(e)[:500], done=True)
-                    raise
-                # partial streaming (http_server.rs:111, partial_stream.rs):
-                # only aggregation plans over stream-capable sources; other
-                # plans fall back to the row-streaming path (which is
-                # already incremental per partition)
-                use_partial = debounce is not None and plan_supports_partial_stream(
-                    plan, server_self.miso.registry
-                )
-                # Splunk preview streaming (enable_partial_stream,
-                # query_runner.rs run_with_previews): a fully-pushable
-                # Splunk plan streams the service's own preview rounds
-                splunk_preview = (
-                    None if use_partial or debounce is None
-                    else server_self._splunk_preview(plan)
-                )
-                run_ctx = None
-                try:
-                    df = None
-                    if not use_partial and splunk_preview is None:
-                        # run_with_caches + explicit release: each
-                        # request runs on its own short-lived thread,
-                        # so the compiler's deferred per-thread release
-                        # would never fire — the emit finally below
-                        # unpersists this run's caches instead
-                        df, run_ctx = server_self.miso.compiler.run_with_caches(
-                            plan
-                        )
+                    # partial streaming (http_server.rs:111,
+                    # partial_stream.rs): only aggregation plans over
+                    # stream-capable sources; other plans take the row
+                    # path, which is already incremental per partition
+                    use_partial = debounce is not None and plan_supports_partial_stream(
+                        plan, miso.registry
+                    )
+                    # Splunk preview streaming (enable_partial_stream,
+                    # query_runner.rs run_with_previews): a fully-pushable
+                    # Splunk plan streams the service's own preview rounds
+                    splunk_preview = (
+                        None if use_partial or debounce is None
+                        else server_self._splunk_preview(plan)
+                    )
+                    # the row path compiles here, so a compile error is
+                    # a 400, not an in-band error frame
+                    rows = (
+                        None if use_partial or splunk_preview is not None
+                        else miso.run(plan, qid, text)
+                    )
                 except Exception as e:
                     status("internal_error", str(e)[:500], done=True)
                     raise
@@ -841,9 +829,16 @@ class MisoServer:
                 # Runtime failures after this point can't become an HTTP
                 # error code (headers are gone); emit an SSE error frame
                 # instead, like the reference surfaces mid-stream errors
-                # in-band.
+                # in-band. A write to a dropped client raises OSError,
+                # which cancels the query's Spark jobs on its way out.
                 try:
-                    if splunk_preview is not None:
+                    if rows is not None:
+                        # rows stream out as Spark completes partitions
+                        # — the SSE behavior of the reference
+                        with closing(rows):
+                            for line in rows:
+                                self._data(line)
+                    elif splunk_preview is not None:
                         src, spl, handle = splunk_preview
                         # Splunk returns every field as a string; the
                         # negotiated handle's stats typing replays on
@@ -851,66 +846,28 @@ class MisoServer:
                         # types as the non-streamed path
                         # (query_runner.rs
                         # fetch_results_with_stats_transform)
-                        for kind, rid, rows in src.run_job_with_previews(spl):
+                        for kind, rid, page in src.run_job_with_previews(spl):
+                            objs = (src.coerce_stats_row(r, handle) for r in page)
                             if kind == "partial":
-                                for r in rows:
-                                    obj = src.coerce_stats_row(r, handle)
-                                    obj[METADATA_FIELD] = {PARTIAL_ID_FIELD: rid}
-                                    self.wfile.write(
-                                        f"data: {json.dumps(obj)}\n\n".encode()
-                                    )
-                                marker = {
-                                    METADATA_FIELD: {
-                                        PARTIAL_ID_FIELD: rid,
-                                        PARTIAL_DONE_FIELD: True,
-                                    }
-                                }
-                                self.wfile.write(
-                                    f"data: {json.dumps(marker)}\n\n".encode()
-                                )
+                                self._partial_round(rid, objs)
                             else:
-                                for r in rows:
-                                    obj = src.coerce_stats_row(r, handle)
-                                    self.wfile.write(
-                                        f"data: {json.dumps(obj)}\n\n".encode()
-                                    )
-                    elif use_partial:
-                        def emit(rid: int, rows: list[str], final: bool) -> None:
-                            if final:
-                                for line in rows:
-                                    self.wfile.write(f"data: {line}\n\n".encode())
-                                return
-                            for line in rows:
-                                obj = json.loads(line)
-                                obj[METADATA_FIELD] = {PARTIAL_ID_FIELD: rid}
-                                self.wfile.write(
-                                    f"data: {json.dumps(obj)}\n\n".encode()
-                                )
-                            marker = {
-                                METADATA_FIELD: {
-                                    PARTIAL_ID_FIELD: rid,
-                                    PARTIAL_DONE_FIELD: True,
-                                }
-                            }
-                            self.wfile.write(
-                                f"data: {json.dumps(marker)}\n\n".encode()
-                            )
-
-                        run_partial_stream(
-                            server_self.miso.compiler, plan, emit, debounce_s=debounce
-                        )
+                                for obj in objs:
+                                    self._data(json.dumps(obj))
                     else:
-                        # rows stream out as Spark completes partitions —
-                        # the SSE behavior of the reference
-                        for line in df.toJSON().toLocalIterator(prefetchPartitions=True):
-                            self.wfile.write(f"data: {line}\n\n".encode())
+                        def emit(rid: int, lines: list[str], final: bool) -> None:
+                            if not final:
+                                self._partial_round(rid, map(json.loads, lines))
+                                return
+                            for line in lines:
+                                self._data(line)
+
+                        with miso.job_group(qid, text):
+                            run_partial_stream(
+                                miso.compiler, plan, emit, debounce_s=debounce
+                            )
                 except OSError:
-                    # client dropped mid-stream: abort the Spark jobs
-                    # still computing rows nobody will read — the
-                    # reference cancels the workflow via its
-                    # CancellationToken when the SSE stream drops
-                    # (http_server.rs:347 cancel.cancel())
-                    server_self.miso.spark.sparkContext.cancelJobGroup(qgroup)
+                    # client dropped mid-stream (http_server.rs:347
+                    # cancel.cancel())
                     with server_self.metrics_lock:
                         server_self.metrics["queries_cancelled_total"] += 1
                     status("cancelled", done=True)
@@ -923,15 +880,8 @@ class MisoServer:
                         payload = json.dumps({"error": str(e)[:500]})
                         self.wfile.write(f"event: error\ndata: {payload}\n\n".encode())
                     except OSError:
-                        server_self.miso.spark.sparkContext.cancelJobGroup(qgroup)
+                        pass  # client gone too; the jobs are already cancelled
                     return
-                finally:
-                    # all result rows are on the wire (or the stream
-                    # died): this run's persisted caches go now —
-                    # Spark's CacheManager would otherwise hold one
-                    # entry per dynamic-filtered query forever
-                    if run_ctx is not None:
-                        run_ctx.release()
                 status("success", done=True)
                 try:
                     self.wfile.write(b"event: done\ndata: {}\n\n")

@@ -87,6 +87,20 @@ class Source:
     def collection_static_fields(self, collection: str) -> dict[str, str]:
         return getattr(self, "static_fields", {}).get(collection, {})
 
+    def rename_static_fields(self, collection: str, df: DataFrame) -> DataFrame:
+        """``df``, a scan of ``collection``, with each static field's
+        source column renamed (not copied) to its visible name, like
+        scan.rs apply_static_fields removes the original key."""
+        fields = self.collection_static_fields(collection)
+        if not fields:
+            return df
+        cols = set(df.columns)
+        renames: dict[str, str] = {}
+        for to, frm in fields.items():
+            if frm in cols:
+                renames.setdefault(frm, to)
+        return df.withColumnsRenamed(renames) if renames else df
+
     def table(self, spark: SparkSession, collection: str) -> DataFrame:
         raise NotImplementedError
 
@@ -446,10 +460,4 @@ class SourceRegistry:
 
     def table(self, connector: str, collection: str) -> DataFrame:
         src = self.source(connector)
-        df = src.table(self.spark, collection)
-        # static field replacements rename (not copy) the source column,
-        # like scan.rs apply_static_fields removes the original key
-        for to, frm in src.collection_static_fields(collection).items():
-            if frm in df.columns:
-                df = df.withColumnRenamed(frm, to)
-        return df
+        return src.rename_static_fields(collection, src.table(self.spark, collection))

@@ -101,10 +101,7 @@ def _stream_scan(compiler, scan: P.Scan, max_files_per_trigger: int) -> DataFram
     # apply collection static_fields renames exactly as the batch path
     # does (SourceRegistry.table) so @time-style fields resolve the same
     # whether the query runs batch or partial-stream
-    for to, frm in src.collection_static_fields(scan.collection).items():
-        if frm in sdf.columns:
-            sdf = sdf.withColumnRenamed(frm, to)
-    return sdf
+    return src.rename_static_fields(scan.collection, sdf)
 
 
 def _compile_head(compiler, steps, max_files_per_trigger: int) -> DataFrame:
@@ -306,12 +303,11 @@ def run_partial_stream(
         # the block manager by its count() — stream it out in bounded
         # chunks. No second full-plan execution, and the final reflects
         # exactly the files the stream observed (a batch recompute
-        # could see later arrivals). The batch fallback only covers the
-        # can't-happen edge of a truncated round with no held state.
+        # could see later arrivals). Only an aggregate round is ever
+        # truncated, and on_batch holds its frame before returning.
         from itertools import islice
 
-        final_df = held[0] if held else compiler.run(plan)
-        it = final_df.toJSON().toLocalIterator(prefetchPartitions=True)
+        it = held[0].toJSON().toLocalIterator(prefetchPartitions=True)
         first = True
         while True:
             chunk = list(islice(it, max_rows_per_round))

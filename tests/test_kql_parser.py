@@ -137,12 +137,11 @@ def test_error_recovery_collects_multiple_errors():
     with pytest.raises(ParseErrors) as ei:
         parse_kql(
             "t.x | where | project | limit abc | sort by field1",
-            collect_errors=True,
         )
     assert len(ei.value.errors) >= 3
     # a valid query parses identically in recovery mode
     a = parse_kql("t.x | where a > 1 | count")
-    b = parse_kql("t.x | where a > 1 | count", collect_errors=True)
+    b = parse_kql("t.x | where a > 1 | count")
     assert a == b
 
 

@@ -451,7 +451,6 @@ def test_multiple_malformed_steps_collect_multiple_errors():
     with pytest.raises(ParseErrors) as ei:
         parse_kql(
             "connector.table | where | project | limit invalid | sort by field1",
-            collect_errors=True,
         )
     assert len(ei.value.errors) >= 2
 

@@ -532,6 +532,42 @@ def test_splunk_preview_rows_replay_stats_typing(spark):
         stub.shutdown()
 
 
+def test_splunk_preview_eligibility_follows_executed_negotiation(spark):
+    """`sort by | take` absorbs into Splunk only once the plan rewrites
+    run (sort+take → top), as they do when the compiler executes the
+    query: preview eligibility uses the same fixpoint negotiation, so
+    the query streams the service's preview rounds."""
+    from search_stubs import SplunkStub
+
+    from miso_spark.server import MisoServer
+
+    stub = SplunkStub({"idx": [{"a": i, "b": i % 2} for i in range(8)]}, preview_polls=2)
+    srv = MisoServer(spark, port=0)
+    srv.add_connector("sp", {
+        "type": "splunk", "url": stub.url,
+        "enable_partial_stream": True, "preview_interval": "10ms",
+    })
+    srv.start_background()
+    try:
+        resp = _post(srv, "/query", {"query": "sp.idx | sort by a | take 5",
+                                     "partial_stream": True})
+        frames = []
+        for raw in resp:
+            line = raw.decode().strip()
+            if line.startswith("event: done"):
+                break
+            if line.startswith("data: "):
+                frames.append(json.loads(line[6:]))
+        rounds = {f["_miso_metadata"]["id"] for f in frames if "_miso_metadata" in f}
+        finals = [f for f in frames if "_miso_metadata" not in f]
+        assert rounds == {0, 1}
+        assert len(stub.spls) == 1 and "head 5" in stub.spls[0]
+        assert len(finals) == 5
+    finally:
+        srv.shutdown()
+        stub.shutdown()
+
+
 def test_metrics_families_and_prometheus_exposition(server):
     """metrics.rs parity: latency aggregates + running gauge +
     dynamic-filter counter, served as JSON and as Prometheus text."""
